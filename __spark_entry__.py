@@ -3,7 +3,10 @@
 The driver's verify runs ``entry(spark)`` as a smoke check, runs
 each ``queries()[name]`` at sf=0.01 and compares it against the
 matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+order-insensitive value-hash). ``queries()`` and ``oracle_sql()``
+list the registry in registration order. The correctness gate is
+tier-1's tests/test_oracle_parity.py, which makes the same comparison
+for every oracle-paired query on each test run.
 
 Implementation lives in ``sas_etl_spark``; this module only adapts
 the registry to the driver's shape.

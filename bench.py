@@ -3,7 +3,7 @@
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print
 ONE JSON line with per-query median latency.
 
-Protocol (comparable to BENCH_r1-r8; see the round-9 correction in
+Protocol (comparable to history/BENCH_r01-r08.json; see the round-9 correction in
 SCALE.md for what it does and does not measure):
 - Warm session; JVM startup and first-action warmup excluded.
 - Each query's logical plan is built once and re-collected per run.

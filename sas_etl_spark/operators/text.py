@@ -187,7 +187,7 @@ def token_ngrams(toks: Column, n: int) -> Column:
     Same strings: element i zips (toks[i+1], ..., toks[i+n]) exactly
     as slice(toks, i+1, n) collected them, and concat_ws/array_join
     agree on null-free split output. Measured at sf0.1 (noop):
-    q_ngram_contamination 2.13 s -> see OPTIMIZATION_r17.md."""
+    q_ngram_contamination 2.13 s -> see history/OPTIMIZATION_r17.md."""
     n_grams = F.size(toks) - (n - 1)
     # guard: short docs need an explicit empty-array branch (and the
     # slices below would see a negative length)

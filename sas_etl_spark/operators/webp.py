@@ -54,7 +54,7 @@ Scope (documented precisely, the house rule for codec lanes):
 The Spark-facing `webp_stats` lane is attested: `q_webp_features`
 (queries/io_stream.py) writes the six-configuration VP8L fixture,
 decodes it through this module inside mapInPandas, and hash-matches
-the pure-SQL pixel oracle (green in CORRECTNESS_r14).
+the pure-SQL pixel oracle (green in history/CORRECTNESS_r14.json).
 """
 
 from __future__ import annotations

@@ -20,8 +20,14 @@ from __future__ import annotations
 import io
 import re
 from contextlib import redirect_stdout
+from pathlib import Path
 
 from pyspark.sql import DataFrame
+
+#: Committed normalized plans, one ``<query>.txt`` per benchmarked
+#: query. The registry sweep in tests/test_plan_audit.py diffs them;
+#: ``python -m sas_etl_spark.plans [names...]`` rewrites them.
+GOLDEN_DIR = Path(__file__).resolve().parents[2] / "plans" / "golden"
 
 
 def formatted_plan(df: DataFrame) -> str:
@@ -30,6 +36,23 @@ def formatted_plan(df: DataFrame) -> str:
     with redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def normalized_plan(df: DataFrame) -> str:
+    """formatted_plan without what varies between runs of one plan:
+    expression ids, plan ids, lambda-variable suffixes (a JVM-wide
+    counter), scanned file lists and paths, and the partition counts
+    of exchanges (they follow core count and
+    ``spark.sql.shuffle.partitions``, not the query)."""
+    plan = formatted_plan(df)
+    plan = re.sub(r"#\d+L?", "", plan)
+    plan = re.sub(r"plan_id=\d+", "plan_id=", plan)
+    plan = re.sub(r"(lambda \w+?)_\d+\b", r"\1", plan)
+    plan = re.sub(r"(Location: \w+) \[.*\]", r"\1", plan)
+    plan = re.sub(r"(?:file:|/tmp/)[^\s,\]\)]*", "<path>", plan)
+    # an exchange's partitioning ends in its count, then the shuffle
+    # origin: "hashpartitioning(k, 8), ENSURE_REQUIREMENTS, [plan_id="
+    return re.sub(r"([(\s])\d+\)(, \w+, \[plan_id=)", r"\1N)\2", plan)
 
 
 def single_partition_exchanges(

@@ -3,8 +3,10 @@
 Every operator from SURVEY.md §2 lands here as a ``QuerySpec``:
 a named PySpark query callable plus (when SQL-expressible) the
 equivalent DuckDB oracle SQL. ``__spark_entry__.py`` exposes the
-registry to the driver, whose verify compares row-count + schema +
-order-insensitive value-hash at sf=0.01.
+registry in registration order (``queries_map``/``oracle_sql_map``).
+The correctness gate is tier-1's tests/test_oracle_parity.py, which
+compares every oracle-paired query against DuckDB at sf=0.01 by
+row-count + schema + order-insensitive value-hash.
 
 Parity rules baked into every spec (SURVEY.md §4.3):
 - Alias every computed column identically on both sides (the driver
@@ -53,63 +55,6 @@ class QuerySpec:
 #: name -> spec; populated by the @query decorator at import time.
 QUERIES: dict[str, QuerySpec] = {}
 
-#: Driver-facing emission order. The verify harness attests the FIRST 50
-#: entries of ``queries()`` in dict order (hard cap, measured in round 1),
-#: so each round this list leads with the queries that most need a fresh
-#: green row: previously-unattested operators, queries whose plan changed
-#: this round, and brand-new queries — followed by a few always-green
-#: sentinels to guard regressions. Names not listed keep registration
-#: order after the prioritized block; names listed but not registered are
-#: an error (pinned by tests/test_registry_order.py).
-#: Re-attestation cadence (rounds): a green driver row older than this
-#: is DUE for a fresh slot; older still is OVERDUE. Enforced by
-#: tests/test_attestation_staleness.py against DRIVER_PRIORITY.
-ATTEST_CADENCE = 6
-
-#: Deliberate one-round slips of the cadence: (query, round_due) rows
-#: displaced from round_due's full window by that round's capability
-#: registrations / changed-code re-attests. Entries are valid ONLY for
-#: the round they name (the staleness test fails an entry whose round
-#: has passed — the slipped row is then OVERDUE and must be in the next
-#: window unconditionally). Round 17 is structurally over-subscribed:
-#: the 25 rows the r16 optimizations staled (VERDICT r16 item 1, the
-#: round's hard debt) + the expired q_ab_test slip (overdue, no
-#: further slip possible) + this round's own optimization blast
-#: radius (codec kernels + token_ngrams fold) consume 33 slots, while
-#: the due r11 cohort alone is 38 (37 after the q_span_dedup overlap
-#: with the changed set). 25+1+37 = 63 > 50 even with zero new work,
-#: so 20 due rows slip one round. Slipped: the lowest-risk subset —
-#: pure row transforms / set ops / format lanes, each unchanged since
-#: r11 ("clean" in OPERATORS.md) and green at every attestation; the
-#: due rows KEPT in-window are the bench queries (q_join3_revenue,
-#: q_knn_cosine, q_rollup), the float-sensitive stats lanes, and the
-#: iterative/BPE/stream operators where regressions would bite
-#: hardest.
-DOCUMENTED_SLIPS: frozenset[tuple[str, int]] = frozenset(
-    {
-        ("q_case_when", 17),
-        ("q_crosstab_pct", 17),
-        ("q_derive_cols", 17),
-        ("q_distinct_rows", 17),
-        ("q_dupout", 17),
-        ("q_filter_pred", 17),
-        ("q_fixedwidth_roundtrip", 17),
-        ("q_format_lookup", 17),
-        ("q_format_ranges", 17),
-        ("q_interleave", 17),
-        ("q_intersect", 17),
-        ("q_math_rowwise", 17),
-        ("q_merge_many_to_many", 17),
-        ("q_session_window", 17),
-        ("q_sliding_window", 17),
-        ("q_surrogate_key", 17),
-        ("q_topn_sort", 17),
-        ("q_udtf_tokens", 17),
-        ("q_union_all", 17),
-        ("q_video_frame_sample", 17),
-    }
-)
-
 #: Round-close protocol (promoted to standing protocol in round 14,
 #: VERDICT r13 item 8): after the tree settles, run the FULL-registry
 #: sf0.1 oracle sweep in a fresh process — `SKIP=auto
@@ -125,10 +70,11 @@ DOCUMENTED_SLIPS: frozenset[tuple[str, int]] = frozenset(
 #: (measured rounds 6 and 13; a 40-min capped attempt at seven did
 #: not finish). The SPARK side is sub-quadratic everywhere; it is the
 #: ground-truth oracle that cannot scale. These stay exact-verified
-#: at sf0.01 by the driver and at the ~833-doc intermediate SF by
-#: tests/test_intermediate_sf_parity.py. Embedding-based all-pairs
-#: oracles (2,080 vectors at sf0.1) are FEASIBLE and deliberately
-#: not listed (retired from the skip set in round 13).
+#: at sf0.01 by tests/test_oracle_parity.py and at the ~833-doc
+#: intermediate SF by tests/test_intermediate_sf_parity.py.
+#: Embedding-based all-pairs oracles (2,080 vectors at sf0.1) are
+#: FEASIBLE and deliberately not listed (retired from the skip set in
+#: round 13).
 SWEEP_SKIP: frozenset[str] = frozenset(
     {
         "q_jaccard_pairs",
@@ -147,97 +93,6 @@ SWEEP_SKIP: frozenset[str] = frozenset(
         "q_dedup_containment",
     }
 )
-
-DRIVER_PRIORITY: tuple[str, ...] = (
-    # ROUND 17 window (optimization round 2 of 2 — no new
-    # registrations). Composition (50 = 25 + 1 + 7 + 17):
-    # -- (a) the 25 rows the round-16 optimizations staled AFTER the
-    # r16 window was already composed (VERDICT r16 item 1 — every r16
-    # optimization is driver-oracle-unverified until these re-attest):
-    # BM25 family (native-tf rewrite), n-gram lanes (explode-then-
-    # concat), mixture family (single-subtree + broadcast), span dedup
-    # (array_except), and the snapshot-reader cache's 15-query blast
-    # radius.
-    "q_bm25",
-    "q_rrf_hybrid",
-    "q_retrieval_eval",
-    "q_ngram_diversity",
-    "q_bigram_logprob",
-    "q_mixture_apply",
-    "q_domain_mixture",
-    "q_temperature_mixture",
-    "q_mixture_epochs",
-    "q_span_dedup",
-    "q_ivf_build",
-    "q_ivf_serve",
-    "q_ivf_compact",
-    "q_ivf_upsert",
-    "q_ivf_upsert_serve",
-    "q_ivf_pq_build",
-    "q_ivf_pq_serve",
-    "q_semdedup_serve",
-    "q_neardup_index_serve",
-    "q_neardup_mor_serve",
-    "q_snapshot_upsert",
-    "q_snapshot_time_travel",
-    "q_snapshot_vacuum",
-    "q_stream_cdc_upsert",
-    "q_stream_neardup",
-    # -- (b) the expired r16 slip — overdue, unconditional this round.
-    "q_ab_test",
-    # -- (c) this round's own optimization blast radius (function-
-    # level ledger closure of the r17 edits): VP8L kernel work flags
-    # the two pure-Python-decoder webp lanes; JPEG dequant+IDCT
-    # batching flags the two jpeg lanes; the token_ngrams HOF->native
-    # conversion flags its three consumers.
-    "q_webp_features",
-    "q_webp_vp8x",
-    "q_jpeg_features",
-    "q_jpeg_gradient",
-    "q_bloom_contamination",
-    "q_ngram_contamination",
-    "q_repetition_ratio",
-    # -- (d) the due 6-round rotation (r11 cohort): 17 of 37 fit; the
-    # bench queries, float-sensitive stats and iterative operators
-    # stay, the 20 lowest-risk row-transform/setop/format rows slip
-    # one round via DOCUMENTED_SLIPS (see its comment for the
-    # arithmetic — this round is over-subscribed by the r16 debt
-    # alone).
-    "q_join3_revenue",
-    "q_knn_cosine",
-    "q_rollup",
-    "q_approx_percentile",
-    "q_bpe_encode",
-    "q_bpe_train",
-    "q_cohort_retention",
-    "q_corr_stats",
-    "q_cusum",
-    "q_embed_quantize",
-    "q_freq_chisq",
-    "q_grouped_zscore",
-    "q_interp_linear",
-    "q_market_basket",
-    "q_prefix_join",
-    "q_stream_cusum",
-    "q_string_distance",
-)
-
-#: Window bookkeeping rule (learned twice, r7 and r8): NO @query
-#: registration lands without, in the SAME commit, (1) a
-#: DRIVER_PRIORITY slot, (2) the matching update to
-#: tests/test_registry_order.py's must-set, (3) `python
-#: scratch/gen_operators_md.py` regeneration, and (4) a full-suite
-#: rerun on the settled tree. Since round 14 the cadence itself is
-#: code: tests/test_attestation_staleness.py recomputes due/overdue
-#: rows from the CORRECTNESS artifacts and fails any window that
-#: misses them (slips allowed only via DOCUMENTED_SLIPS, one round,
-#: named). No queries registered in round 17 (optimization round —
-#: features frozen); every slot is spent on re-attestation.
-#:
-#: ROUND 18 window plan: (1) any rows the settled-tree ledger flags
-#: changed/moved, then (2) the 20 expired r17 slips (overdue —
-#: unconditional), then (3) the due rotation: the r12 cohort —
-#: everything must fit 50; document slips accordingly.
 
 
 def query(
@@ -261,33 +116,13 @@ def _load_all() -> None:
     import sas_etl_spark.queries  # noqa: F401  (imports submodules)
 
 
-def _driver_order() -> list[str]:
-    """Registry names, DRIVER_PRIORITY block first, rest in registration
-    order. An unregistered priority name raises: silently skipping it
-    would slide other queries into the attestation window and burn the
-    slot unnoticed (exactly what happened in round 2)."""
-    unknown = [n for n in DRIVER_PRIORITY if n not in QUERIES]
-    if unknown:
-        raise KeyError(
-            f"DRIVER_PRIORITY names unregistered queries: {unknown}; "
-            "implement them or remove the names"
-        )
-    prioritized = list(DRIVER_PRIORITY)
-    seen = set(prioritized)
-    return prioritized + [n for n in QUERIES if n not in seen]
-
-
 def queries_map() -> dict[str, QueryFn]:
-    """The driver-facing ``queries()`` payload (DRIVER_PRIORITY order)."""
+    """The driver-facing ``queries()`` payload, in registration order."""
     _load_all()
-    return {name: QUERIES[name].fn for name in _driver_order()}
+    return {name: spec.fn for name, spec in QUERIES.items()}
 
 
 def oracle_sql_map() -> dict[str, str]:
     """The driver-facing ``oracle_sql()`` payload (SQL-expressible only)."""
     _load_all()
-    return {
-        name: QUERIES[name].oracle
-        for name in _driver_order()
-        if QUERIES[name].oracle
-    }
+    return {name: spec.oracle for name, spec in QUERIES.items() if spec.oracle}

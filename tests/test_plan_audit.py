@@ -6,6 +6,7 @@ is a scale bug even while correctness stays green."""
 
 from __future__ import annotations
 
+import difflib
 import re
 
 import pytest
@@ -16,9 +17,10 @@ from sas_etl_spark.plans import (
     assert_no_single_partition_exchange,
     audit,
     formatted_plan,
+    normalized_plan,
 )
 from sas_etl_spark.registry import QUERIES, queries_map
-from tests.conftest import SF_CORRECTNESS
+from tests.conftest import SF_CORRECTNESS, SF_SMOKE
 
 queries_map()
 
@@ -111,6 +113,17 @@ def test_aggregations_have_map_side_partials(spark):
     assert a["plan"].count("HashAggregate") >= 2
 
 
+def test_normalized_plan_is_stable_and_sees_plan_changes(spark):
+    """Two builds of one query normalize to the same text (expression
+    and plan ids differ between them), and an added filter changes it
+    — so a deliberate plan change fails the golden check."""
+    build = QUERIES["q_pricing_summary"].fn
+    first = normalized_plan(build(spark, SF_SMOKE))
+    assert normalized_plan(build(spark, SF_SMOKE)) == first
+    filtered = build(spark, SF_SMOKE).filter(F.col("cnt") > 1)
+    assert normalized_plan(filtered) != first
+
+
 def test_minhash_pipeline_avoids_cartesian(spark):
     assert_no_cartesian(
         QUERIES["q_near_dup_minhash"].fn(spark, SF_CORRECTNESS), "q_near_dup_minhash"
@@ -186,17 +199,25 @@ def test_no_query_plans_cartesian_or_single_partition_funnel(spark):
     trips neither. Runs at sf0.001 — plan shape, not data, is under
     test.
 
+    The same pass diffs each benchmarked query's normalized plan
+    against its committed golden (plans/golden/<query>.txt), so an
+    intended plan change shows up as a reviewed golden diff.
+
     (Round-6 note: the previous marker, the literal string 'Exchange
     SinglePartition', never occurs in formatted explain output — the
     check was a silent no-op. The structural detector in
     plans.audit.single_partition_funnels replaced it and immediately
     caught q_rfm_segments' percentile funnel.)"""
-    from sas_etl_spark.plans.audit import single_partition_funnels
+    from perfbench.workloads import WORKLOADS
+    from sas_etl_spark.plans.audit import GOLDEN_DIR, single_partition_funnels
 
-    sf = "/root/testdata/sf0.001"
+    golden = {p.stem: p.read_text() for p in GOLDEN_DIR.glob("*.txt")}
+    benched = {q for w in WORKLOADS.values() for q in w.queries}
     offenders = {}
+    drift = []
     for name, spec in sorted(QUERIES.items()):
-        plan = formatted_plan(spec.fn(spark, sf))
+        df = spec.fn(spark, SF_SMOKE)
+        plan = formatted_plan(df)
         flags = []
         if "CartesianProduct" in plan:
             flags.append("cartesian")
@@ -205,7 +226,25 @@ def test_no_query_plans_cartesian_or_single_partition_funnel(spark):
             flags.append(f"single-partition funnel {funnels}")
         if flags:
             offenders[name] = flags
+        if name in golden:
+            drift += difflib.unified_diff(
+                golden[name].splitlines(),
+                normalized_plan(df).splitlines(),
+                f"plans/golden/{name}.txt",
+                f"{name} as built",
+                lineterm="",
+            )
     assert not offenders, offenders
+    assert set(golden) == benched, (
+        "plans/golden/ must hold exactly the benchmarked queries: add with "
+        "`python -m sas_etl_spark.plans <name>`, delete stale files; "
+        f"missing {sorted(benched - set(golden))}, "
+        f"stale {sorted(set(golden) - benched)}"
+    )
+    assert not drift, (
+        "plan changed; review the diff, then rewrite the goldens with "
+        "`python -m sas_etl_spark.plans`:\n" + "\n".join(drift)
+    )
 
 
 def test_curation_pipeline_is_single_shuffle_no_sort(spark):
