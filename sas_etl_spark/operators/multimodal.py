@@ -8,6 +8,12 @@ as Arrow-batched pandas iterators (mapInPandas) — the ONLY sanctioned
 Python hot path in the engine (SURVEY.md §2.11) — so each task
 processes whole record batches, never rows.
 
+Every codec lane is one ``payload_lane`` call: a module-level decoder
+(bytes -> decoded value) and a small module-level reducer (id, decoded
+value -> one output row). Executors import both from the package zip
+that ``session._ship_package`` adds to every Python worker, and
+``payload_lane`` ensures that ship on the session it runs in.
+
 Decoding is REAL for six formats, zero external codecs: binary PPM
 (P6), PNG (stdlib zlib inflate + all five scanline filters), baseline
 JPEG (huffman + dequant + IDCT + YCbCr, stdlib+numpy), lossless WebP
@@ -25,17 +31,56 @@ signature, batch shape — for tests that don't care about pixels.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+import re
+import struct
+import zlib
+from collections.abc import Callable, Iterator
+from functools import partial
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sas_etl_spark.session import _ship_package
+
 FEATURE_DIM = 8
 
 #: PNG file signature (RFC 2083 §12.11).
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
+
+
+def payload_lane(
+    df: DataFrame,
+    decode: Callable[[bytes], object],
+    reduce: Callable[[int, object], tuple],
+    schema: str,
+    id_pattern: str,
+    content_col: str = "content",
+    path_col: str = "path",
+) -> DataFrame:
+    """The one bytes -> decoded -> row lane over a binaryFile frame
+    (path, content). Per row: the id is group 1 of ``id_pattern``
+    searched in the path (-1 when it does not match), then
+    ``reduce(id, decode(bytes(content)))`` returns one output row as a
+    tuple in ``schema`` (a flat DDL string) order; each Arrow batch
+    yields one pandas frame. ``decode`` and ``reduce`` must be
+    module-level functions (or partials of them): they pickle by
+    reference and executors import them from the shipped package."""
+    _ship_package(df.sparkSession)
+    names = [field.split()[0] for field in schema.split(",")]
+
+    def per_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        pat = re.compile(id_pattern)
+        for pdf in batches:
+            rows = []
+            for path, content in zip(pdf[path_col], pdf[content_col]):
+                m = pat.search(path)
+                img_id = int(m.group(1)) if m else -1
+                rows.append(reduce(img_id, decode(bytes(content))))
+            yield pd.DataFrame.from_records(rows, columns=names)
+
+    return df.select(path_col, content_col).mapInPandas(per_batch, schema=schema)
 
 
 def attach_fake_payload(df: DataFrame, key_col: str, mime: str = "image/fake") -> DataFrame:
@@ -78,7 +123,7 @@ def decode_image(payload: bytes) -> "np.ndarray":
         "unrecognized image signature; JPEG (baseline), PNG, PPM, lossless "
         "WebP (VP8L), WAV and Y4M all decode for real here (decode_jpeg / "
         "decode_png / decode_ppm / webp.decode_webp / decode_wav / "
-        "video_frame_sample_stats); lossy WebP needs an external codec"
+        "decode_y4m); lossy WebP needs an external codec"
     )
 
 
@@ -144,101 +189,49 @@ def write_ppm_neardup_fixture(out_dir: str, n_images: int = 64) -> None:
             f.write(header + arr.tobytes())
 
 
-def _make_ppm_decoder():
-    """Build the validated P6 decoder as a NESTED function, defined
-    once and shared by every consumer (decode_ppm, image_stats,
-    image_resized_stats). Nested because cloudpickle serializes
-    nested functions BY VALUE: a mapInPandas closure capturing it
-    runs on executors without the package being importable there —
-    previously each closure carried its own inline copy, and the
-    copies drifted (the stats lanes silently skipped the magic/maxval
-    validation)."""
-
-    def decode(payload: bytes):
-        import numpy as _np
-
-        tokens: list[bytes] = []
-        pos = 0
-        while len(tokens) < 4:  # magic, width, height, maxval
-            while pos < len(payload) and payload[pos : pos + 1].isspace():
-                pos += 1
-            if payload[pos : pos + 1] == b"#":  # comment to end-of-line
-                while pos < len(payload) and payload[pos : pos + 1] != b"\n":
-                    pos += 1
-                continue
-            start = pos
-            while pos < len(payload) and not payload[pos : pos + 1].isspace():
-                pos += 1
-            tokens.append(payload[start:pos])
-        if tokens[0] != b"P6":
-            raise ValueError(f"not a binary PPM: magic {tokens[0]!r}")
-        width, height, maxval = int(tokens[1]), int(tokens[2]), int(tokens[3])
-        if maxval != 255:
-            raise ValueError(f"only maxval 255 supported, got {maxval}")
-        pos += 1  # single whitespace byte after maxval, then raw pixels
-        pixels = _np.frombuffer(
-            payload, dtype=_np.uint8, count=width * height * 3, offset=pos
-        )
-        return width, height, pixels.reshape(height, width, 3)
-
-    return decode
-
-
 def decode_ppm(payload: bytes) -> "np.ndarray":
     """Parse P6 bytes -> (height, width, 3) uint8 array. Real decode:
-    header tokenization (comment-tolerant), then a zero-copy
-    frombuffer reshape of the pixel plane."""
-    _, _, arr = _make_ppm_decoder()(payload)
-    return arr
-
-
-def _decoded_image_stats(
-    df: DataFrame,
-    decode,
-    content_col: str,
-    path_col: str,
-    id_pattern: str,
-) -> DataFrame:
-    """Shared bytes->pixels->stats lane: decode each payload with
-    ``decode`` (any (w, h, array) decoder — PPM, PNG, ...) and emit
-    per-image (img_id, width, height, per-channel means) via
-    mapInPandas. Input is a binaryFile-source frame (path, content);
-    each Arrow batch is decoded row-wise with one numpy reduction per
-    image. Self-contained closure (cloudpickle by value), same
-    contract as extract_features."""
-
-    def per_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import re as _re
-
-        import numpy as _np
-
-        pat = _re.compile(id_pattern)
-        for pdf in batches:
-            out = {
-                "img_id": [],
-                "width": [],
-                "height": [],
-                "mean_r": [],
-                "mean_g": [],
-                "mean_b": [],
-            }
-            for path, content in zip(pdf[path_col], pdf[content_col]):
-                w, h, arr = decode(bytes(content))
-                means = arr.astype(_np.float64).mean(axis=(0, 1))
-                m = pat.search(path)
-                out["img_id"].append(int(m.group(1)) if m else -1)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["mean_r"].append(float(means[0]))
-                out["mean_g"].append(float(means[1]))
-                out["mean_b"].append(float(means[2]))
-            yield pd.DataFrame(out)
-
-    schema = (
-        "img_id long, width int, height int, "
-        "mean_r double, mean_g double, mean_b double"
+    header tokenization (comment-tolerant, magic and maxval
+    validated), then a zero-copy frombuffer reshape of the pixel
+    plane."""
+    tokens: list[bytes] = []
+    pos = 0
+    while len(tokens) < 4:  # magic, width, height, maxval
+        while pos < len(payload) and payload[pos : pos + 1].isspace():
+            pos += 1
+        if payload[pos : pos + 1] == b"#":  # comment to end-of-line
+            while pos < len(payload) and payload[pos : pos + 1] != b"\n":
+                pos += 1
+            continue
+        start = pos
+        while pos < len(payload) and not payload[pos : pos + 1].isspace():
+            pos += 1
+        tokens.append(payload[start:pos])
+    if tokens[0] != b"P6":
+        raise ValueError(f"not a binary PPM: magic {tokens[0]!r}")
+    width, height, maxval = int(tokens[1]), int(tokens[2]), int(tokens[3])
+    if maxval != 255:
+        raise ValueError(f"only maxval 255 supported, got {maxval}")
+    pos += 1  # single whitespace byte after maxval, then raw pixels
+    pixels = np.frombuffer(
+        payload, dtype=np.uint8, count=width * height * 3, offset=pos
     )
-    return df.mapInPandas(per_batch, schema=schema)
+    return pixels.reshape(height, width, 3)
+
+
+#: Output of the per-image stats reducer below.
+_STATS_SCHEMA = (
+    "img_id long, width int, height int, "
+    "mean_r double, mean_g double, mean_b double"
+)
+
+
+def _channel_means(img_id: int, arr: "np.ndarray") -> tuple:
+    """Per-image (img_id, width, height, per-channel means) — the row
+    every image stats lane (PPM, PNG, JPEG, WebP) emits."""
+    h, w = arr.shape[:2]
+    means = arr.astype(np.float64).mean(axis=(0, 1))
+    return img_id, w, h, float(means[0]), float(means[1]), float(means[2])
 
 
 def image_stats(
@@ -247,11 +240,33 @@ def image_stats(
     path_col: str = "path",
     id_pattern: str = r"img_(\d+)\.ppm$",
 ) -> DataFrame:
-    """Decode PPM payloads -> per-image stats (see
-    _decoded_image_stats — the shared lane)."""
-    return _decoded_image_stats(
-        df, _make_ppm_decoder(), content_col, path_col, id_pattern
+    """Decode PPM payloads -> per-image stats (_channel_means)."""
+    return payload_lane(
+        df, decode_ppm, _channel_means, _STATS_SCHEMA, id_pattern, content_col, path_col
     )
+
+
+def _phash_row(img_id: int, arr: "np.ndarray", grid: int) -> tuple:
+    """(img_id, width, height, phash) — the image_phash reducer."""
+    h, w = arr.shape[:2]
+    gray = arr.astype(np.int64).sum(axis=2) // 3
+    bx = (np.arange(w, dtype=np.int64) * grid) // w
+    by = (np.arange(h, dtype=np.int64) * grid) // h
+    cell = (by[:, None] * grid + bx[None, :]).ravel()
+    sums = np.bincount(cell, weights=None, minlength=grid * grid)
+    csum = np.bincount(
+        cell, weights=gray.ravel(), minlength=grid * grid
+    ).astype(np.int64)
+    total, n_total = int(csum.sum()), w * h
+    bits = csum * n_total > total * sums
+    # exact Python-int pack, then two's-complement fold to signed 64
+    # (grid=8 sets bit 63; numpy int64 shifts would wrap UB-style,
+    # DuckDB sums in hugeint and folds identically — see _PHASH_ORACLE)
+    uhash = 0
+    for bit in np.nonzero(bits)[0]:
+        uhash |= 1 << int(bit)
+    phash = uhash - (1 << 64) if uhash >= 1 << 63 else uhash
+    return img_id, w, h, phash
 
 
 def image_phash(
@@ -278,45 +293,14 @@ def image_phash(
     image); the hash is 2 * grid^2 integer ops per pixel. Grouping
     duplicates afterward is an ordinary map-side-combined groupBy on
     a 64-bit key."""
-    decode = _make_ppm_decoder()
-
-    def per_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import re as _re
-
-        import numpy as _np
-
-        pat = _re.compile(id_pattern)
-        for pdf in batches:
-            out = {"img_id": [], "width": [], "height": [], "phash": []}
-            for path, content in zip(pdf[path_col], pdf[content_col]):
-                w, h, arr = decode(bytes(content))
-                gray = arr.astype(_np.int64).sum(axis=2) // 3
-                bx = (_np.arange(w, dtype=_np.int64) * grid) // w
-                by = (_np.arange(h, dtype=_np.int64) * grid) // h
-                cell = (by[:, None] * grid + bx[None, :]).ravel()
-                sums = _np.bincount(cell, weights=None, minlength=grid * grid)
-                csum = _np.bincount(
-                    cell, weights=gray.ravel(), minlength=grid * grid
-                ).astype(_np.int64)
-                total, n_total = int(csum.sum()), w * h
-                bits = csum * n_total > total * sums
-                # exact Python-int pack, then two's-complement fold to
-                # signed 64 (grid=8 sets bit 63; numpy int64 shifts
-                # would wrap UB-style, DuckDB sums in hugeint and folds
-                # identically — see _PHASH_ORACLE)
-                uhash = 0
-                for bit in _np.nonzero(bits)[0]:
-                    uhash |= 1 << int(bit)
-                phash = uhash - (1 << 64) if uhash >= 1 << 63 else uhash
-                m = pat.search(path)
-                out["img_id"].append(int(m.group(1)) if m else -1)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["phash"].append(phash)
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(
-        per_batch, schema="img_id long, width int, height int, phash long"
+    return payload_lane(
+        df,
+        decode_ppm,
+        partial(_phash_row, grid=grid),
+        "img_id long, width int, height int, phash long",
+        id_pattern,
+        content_col,
+        path_col,
     )
 
 
@@ -332,9 +316,6 @@ def image_phash(
 
 
 def _png_chunk(tag: bytes, body: bytes) -> bytes:
-    import struct
-    import zlib
-
     return (
         struct.pack(">I", len(body))
         + tag
@@ -349,9 +330,6 @@ def png_bytes(width: int, height: int, img_idx: int) -> bytes:
     mod 256 — recomputable by a SQL oracle), encoded with stdlib zlib
     only. Scanline y is filtered with type y % 5, so decoding requires
     all five PNG filter reconstructions."""
-    import struct
-    import zlib
-
     x = np.arange(width, dtype=np.int64)[None, :, None]
     y = np.arange(height, dtype=np.int64)[:, None, None]
     c = np.arange(3, dtype=np.int64)[None, None, :]
@@ -405,103 +383,77 @@ def write_png_fixture(out_dir: str, n_images: int = 64) -> None:
             f.write(png_bytes(w, h, i))
 
 
-def _make_png_decoder():
-    """REAL PNG decode with stdlib zlib only: CRC-checked chunk walk,
-    IDAT inflate, then per-scanline filter reconstruction — None/Up
-    vectorized, Sub via per-channel cumulative sum (addition is
-    associative mod 256), Average/Paeth byte-sequential as the spec's
-    left-dependence requires. Supports the 8-bit RGB non-interlaced
-    subset; anything else raises (a codec library takes over on a
-    cluster that has one). Nested for cloudpickle-by-value, like the
-    PPM/WAV decoders."""
-
-    def decode(payload: bytes):
-        import struct as _struct
-        import zlib as _zlib
-
-        import numpy as _np
-
-        if payload[:8] != b"\x89PNG\r\n\x1a\n":
-            raise ValueError("not a PNG: bad signature")
-        pos = 8
-        width = height = None
-        idat: list[bytes] = []
-        while pos + 8 <= len(payload):
-            (ln,) = _struct.unpack(">I", payload[pos : pos + 4])
-            tag = payload[pos + 4 : pos + 8]
-            body = payload[pos + 8 : pos + 8 + ln]
-            (crc,) = _struct.unpack(
-                ">I", payload[pos + 8 + ln : pos + 12 + ln]
-            )
-            if _zlib.crc32(tag + body) & 0xFFFFFFFF != crc:
-                raise ValueError(f"bad CRC in chunk {tag!r}")
-            if tag == b"IHDR":
-                width, height, depth, ctype, comp, filt, inter = (
-                    _struct.unpack(">IIBBBBB", body)
-                )
-                if (depth, ctype, comp, filt, inter) != (8, 2, 0, 0, 0):
-                    raise ValueError(
-                        "only 8-bit RGB non-interlaced PNG supported here"
-                    )
-            elif tag == b"IDAT":
-                idat.append(body)
-            elif tag == b"IEND":
-                break
-            pos += 12 + ln
-        if width is None or not idat:
-            raise ValueError("missing IHDR/IDAT")
-        raw = _zlib.decompress(b"".join(idat))
-        bpp = 3
-        stride = width * bpp
-        if len(raw) != (stride + 1) * height:
-            raise ValueError("IDAT length != filtered scanline total")
-        out = _np.zeros((height, stride), dtype=_np.int64)
-        prior = _np.zeros(stride, dtype=_np.int64)
-        for row in range(height):
-            off = row * (stride + 1)
-            ft = raw[off]
-            line = _np.frombuffer(
-                raw, _np.uint8, count=stride, offset=off + 1
-            ).astype(_np.int64)
-            if ft == 0:  # None
-                cur = line
-            elif ft == 1:  # Sub: recon = cumsum per channel lane mod 256
-                cur = (
-                    line.reshape(width, bpp).cumsum(axis=0).reshape(-1) % 256
-                )
-            elif ft == 2:  # Up
-                cur = (line + prior) % 256
-            elif ft in (3, 4):  # Average / Paeth: left-sequential
-                cur = _np.zeros(stride, dtype=_np.int64)
-                for i in range(stride):
-                    left = cur[i - bpp] if i >= bpp else 0
-                    up = int(prior[i])
-                    ul = int(prior[i - bpp]) if i >= bpp else 0
-                    if ft == 3:
-                        pred = (left + up) // 2
-                    else:
-                        p = left + up - ul
-                        pa, pb, pc = abs(p - left), abs(p - up), abs(p - ul)
-                        pred = (
-                            left
-                            if pa <= pb and pa <= pc
-                            else (up if pb <= pc else ul)
-                        )
-                    cur[i] = (int(line[i]) + pred) % 256
-            else:
-                raise ValueError(f"bad filter type {ft}")
-            out[row] = cur
-            prior = cur
-        return width, height, out.astype(_np.uint8).reshape(height, width, bpp)
-
-    return decode
-
-
 def decode_png(payload: bytes) -> "np.ndarray":
-    """Parse PNG bytes -> (height, width, 3) uint8 array (stdlib zlib
-    inflate + full filter reconstruction; see _make_png_decoder)."""
-    _, _, arr = _make_png_decoder()(payload)
-    return arr
+    """Parse PNG bytes -> (height, width, 3) uint8 array. REAL decode
+    with stdlib zlib only: CRC-checked chunk walk, IDAT inflate, then
+    per-scanline filter reconstruction — None/Up vectorized, Sub via
+    per-channel cumulative sum (addition is associative mod 256),
+    Average/Paeth byte-sequential as the spec's left-dependence
+    requires. Supports the 8-bit RGB non-interlaced subset; anything
+    else raises (a codec library takes over on a cluster that has
+    one)."""
+    if payload[:8] != _PNG_SIG:
+        raise ValueError("not a PNG: bad signature")
+    pos = 8
+    width = height = None
+    idat: list[bytes] = []
+    while pos + 8 <= len(payload):
+        (ln,) = struct.unpack(">I", payload[pos : pos + 4])
+        tag = payload[pos + 4 : pos + 8]
+        body = payload[pos + 8 : pos + 8 + ln]
+        (crc,) = struct.unpack(">I", payload[pos + 8 + ln : pos + 12 + ln])
+        if zlib.crc32(tag + body) & 0xFFFFFFFF != crc:
+            raise ValueError(f"bad CRC in chunk {tag!r}")
+        if tag == b"IHDR":
+            width, height, depth, ctype, comp, filt, inter = struct.unpack(
+                ">IIBBBBB", body
+            )
+            if (depth, ctype, comp, filt, inter) != (8, 2, 0, 0, 0):
+                raise ValueError("only 8-bit RGB non-interlaced PNG supported here")
+        elif tag == b"IDAT":
+            idat.append(body)
+        elif tag == b"IEND":
+            break
+        pos += 12 + ln
+    if width is None or not idat:
+        raise ValueError("missing IHDR/IDAT")
+    raw = zlib.decompress(b"".join(idat))
+    bpp = 3
+    stride = width * bpp
+    if len(raw) != (stride + 1) * height:
+        raise ValueError("IDAT length != filtered scanline total")
+    out = np.zeros((height, stride), dtype=np.int64)
+    prior = np.zeros(stride, dtype=np.int64)
+    for row in range(height):
+        off = row * (stride + 1)
+        ft = raw[off]
+        line = np.frombuffer(raw, np.uint8, count=stride, offset=off + 1).astype(
+            np.int64
+        )
+        if ft == 0:  # None
+            cur = line
+        elif ft == 1:  # Sub: recon = cumsum per channel lane mod 256
+            cur = line.reshape(width, bpp).cumsum(axis=0).reshape(-1) % 256
+        elif ft == 2:  # Up
+            cur = (line + prior) % 256
+        elif ft in (3, 4):  # Average / Paeth: left-sequential
+            cur = np.zeros(stride, dtype=np.int64)
+            for i in range(stride):
+                left = cur[i - bpp] if i >= bpp else 0
+                up = int(prior[i])
+                ul = int(prior[i - bpp]) if i >= bpp else 0
+                if ft == 3:
+                    pred = (left + up) // 2
+                else:
+                    p = left + up - ul
+                    pa, pb, pc = abs(p - left), abs(p - up), abs(p - ul)
+                    pred = left if pa <= pb and pa <= pc else (up if pb <= pc else ul)
+                cur[i] = (int(line[i]) + pred) % 256
+        else:
+            raise ValueError(f"bad filter type {ft}")
+        out[row] = cur
+        prior = cur
+    return out.astype(np.uint8).reshape(height, width, bpp)
 
 
 def png_stats(
@@ -510,10 +462,10 @@ def png_stats(
     path_col: str = "path",
     id_pattern: str = r"png_(\d+)\.png$",
 ) -> DataFrame:
-    """Decode PNG payloads -> per-image stats (shared lane with the
-    PPM path; only the decoder differs)."""
-    return _decoded_image_stats(
-        df, _make_png_decoder(), content_col, path_col, id_pattern
+    """Decode PNG payloads -> per-image stats (the PPM lane with the
+    PNG decoder)."""
+    return payload_lane(
+        df, decode_png, _channel_means, _STATS_SCHEMA, id_pattern, content_col, path_col
     )
 
 
@@ -562,6 +514,13 @@ def _dct_basis() -> "np.ndarray":
     m = 0.5 * np.cos((2 * x + 1) * u * np.pi / 16)
     m[0] *= 1 / np.sqrt(2)
     return m
+
+
+#: Payload-invariant codec pieces, built once per process import: the
+#: flat zigzag map (natural-order index of zigzag position k) and the
+#: DCT basis.
+_ZZ_FLAT = np.array([r * 8 + c for r, c in _jpeg_zigzag()], dtype=np.int64)
+_DCT_M = _dct_basis()
 
 
 def _jpeg_huff_spec() -> tuple[list[int], list[int], list[int], list[int]]:
@@ -643,8 +602,6 @@ def jpeg_encode(arr: "np.ndarray", quant: "np.ndarray | None" = None) -> bytes:
     not a decode one). AC magnitudes past category 10 raise —
     unreachable for the smooth content this fixture/test lane
     encodes."""
-    import struct
-
     h, w, _ = arr.shape
     if h % 8 or w % 8:
         raise ValueError("jpeg_encode requires multiple-of-8 dimensions")
@@ -664,8 +621,7 @@ def jpeg_encode(arr: "np.ndarray", quant: "np.ndarray | None" = None) -> bytes:
             np.round(128 + 0.5 * r - 0.418688 * g - 0.081312 * b), 0, 255
         ),
     ]
-    m = _dct_basis()
-    zz = _jpeg_zigzag()
+    m = _DCT_M
     dc_bits, dc_vals, ac_bits, ac_vals = _jpeg_huff_spec()
     dc_codes = _canonical_codes(dc_bits, dc_vals)
     ac_codes = _canonical_codes(ac_bits, ac_vals)
@@ -679,7 +635,6 @@ def jpeg_encode(arr: "np.ndarray", quant: "np.ndarray | None" = None) -> bytes:
     # batched FDCT/quantize/zigzag (r17, guide §4.2): one broadcast
     # matmul per plane instead of one small matmul per block — same
     # float ops per 8x8 block, byte-identical streams
-    zz_idx = np.array([r_ * 8 + c_ for r_, c_ in zz], dtype=np.int64)
     seqs = []
     for plane in planes:
         blocks = (
@@ -689,7 +644,7 @@ def jpeg_encode(arr: "np.ndarray", quant: "np.ndarray | None" = None) -> bytes:
             - 128.0
         )
         coef = np.round((m @ blocks @ m.T) / q).astype(np.int64)
-        seqs.append(coef.reshape(-1, 64)[:, zz_idx].tolist())
+        seqs.append(coef.reshape(-1, 64)[:, _ZZ_FLAT].tolist())
     for by in range(nby):
         for bx in range(nbx):
             for ci in range(len(planes)):
@@ -728,7 +683,7 @@ def jpeg_encode(arr: "np.ndarray", quant: "np.ndarray | None" = None) -> bytes:
     def seg(marker: int, body: bytes) -> bytes:
         return struct.pack(">HH", marker, len(body) + 2) + body
 
-    zz_q = [int(q[r_, c_]) for r_, c_ in zz]  # DQT stores zigzag order
+    zz_q = q.reshape(-1)[_ZZ_FLAT].astype(int).tolist()  # DQT stores zigzag order
     qtab = bytes([0]) + bytes(zz_q)  # table 0, 8-bit
     sof_body = struct.pack(">BHHB", 8, h, w, 3) + b"".join(
         struct.pack(">BBB", cid, 0x11, 0) for cid in (1, 2, 3)
@@ -795,6 +750,28 @@ def write_jpeg_gradient_fixture(out_dir: str, n_images: int = 64) -> None:
             f.write(jpeg_encode(jpeg_gradient_array(w, h, i), quant=q))
 
 
+#: Output of the decoded-vs-analytic error reducer below.
+_ERROR_SCHEMA = (
+    "img_id long, width int, height int, max_abs_err long, mean_abs_err_u long"
+)
+
+
+def _gradient_error_row(img_id: int, rgb: "np.ndarray") -> tuple:
+    """Decoded pixels against the ANALYTIC gray gradient both lossy
+    fixtures encode (JPEG gradient, lossy WebP): pixel (x, y) is
+    (img_id % 100) + 2x + 3y -> (img_id, width, height, max_abs_err,
+    mean_abs_err*1e6 as an exact long)."""
+    if img_id < 0:
+        raise ValueError("the expected image is keyed by an id the path lacks")
+    h, w = rgb.shape[:2]
+    x = np.arange(w, dtype=np.int64)[None, :]
+    y = np.arange(h, dtype=np.int64)[:, None]
+    exp = (img_id % 100) + 2 * x + 3 * y
+    err = np.abs(rgb.astype(np.int64) - exp[..., None])
+    # exact integer micro-mean: sum*1e6 // count arithmetic
+    return img_id, w, h, int(err.max()), int(err.sum() * 1_000_000) // int(err.size)
+
+
 def jpeg_gradient_error_stats(
     df: DataFrame,
     content_col: str = "content",
@@ -802,50 +779,10 @@ def jpeg_gradient_error_stats(
     id_pattern: str = r"jpg_(\d+)\.jpg$",
 ) -> DataFrame:
     """Decode the gradient-fixture JPEGs and measure the decoded
-    pixels against the ANALYTIC source image regenerated inside the
-    kernel from the (i, x, y) spec: per image -> (img_id, width,
-    height, max_abs_err, mean_abs_err*1e6 as an exact long). The
-    expected-array regeneration is inlined (no module references) so
-    the closure ships by value like every decoder in this module."""
-    decode = _make_jpeg_decoder()
-
-    def run(batches):
-        import re as _re
-
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in batches:
-            ids, ws, hs, mx, mn = [], [], [], [], []
-            for path, content in zip(pdf[path_col], pdf[content_col]):
-                i = int(_re.search(id_pattern, str(path)).group(1))
-                w, h, rgb = decode(bytes(content))
-                x = _np.arange(w, dtype=_np.int64)[None, :]
-                y = _np.arange(h, dtype=_np.int64)[:, None]
-                exp = (i % 100) + 2 * x + 3 * y
-                err = _np.abs(
-                    rgb.astype(_np.int64) - exp[..., None]
-                )
-                ids.append(i)
-                ws.append(w)
-                hs.append(h)
-                mx.append(int(err.max()))
-                # exact integer micro-mean: sum*1e6 // count arithmetic
-                mn.append(int(err.sum() * 1_000_000) // int(err.size))
-            yield _pd.DataFrame(
-                {
-                    "img_id": _np.asarray(ids, dtype=_np.int64),
-                    "width": _np.asarray(ws, dtype=_np.int32),
-                    "height": _np.asarray(hs, dtype=_np.int32),
-                    "max_abs_err": _np.asarray(mx, dtype=_np.int64),
-                    "mean_abs_err_u": _np.asarray(mn, dtype=_np.int64),
-                }
-            )
-
-    return df.select(path_col, content_col).mapInPandas(
-        run,
-        "img_id long, width int, height int, max_abs_err long, "
-        "mean_abs_err_u long",
+    pixels against the analytic source image regenerated from the
+    (i, x, y) spec (_gradient_error_row)."""
+    return payload_lane(
+        df, decode_jpeg, _gradient_error_row, _ERROR_SCHEMA, id_pattern, content_col, path_col
     )
 
 
@@ -872,268 +809,227 @@ def write_jpeg_fixture(out_dir: str, n_images: int = 64) -> None:
             f.write(jpeg_encode(jpeg_fixture_array(w, h, i)))
 
 
-def _make_jpeg_decoder():
-    """REAL baseline-JPEG decode, stdlib + numpy only: marker walk
-    (DQT/SOF0/DHT/SOS, APPn/COM skipped), canonical huffman decode of
-    the de-stuffed entropy stream, DC prediction + receive/extend,
-    dequantize, dezigzag, matrix IDCT, level shift, YCbCr->RGB.
-    Supported subset: 8-bit SOF0, 1 or 3 components, 1x1 sampling, no
-    restart markers — anything else raises. Nested for
-    cloudpickle-by-value like every decoder in this module.
 
-    r17 (guide §4.2, §4.5): the entropy scan still decodes
-    symbol-by-symbol (inherently sequential), but bit reads are
-    multi-bit extractions, huffman tables get a 9-bit peek LUT, the
-    per-block dezigzag/dequantize/IDCT now runs ONCE, batched over
-    every block of a component with numpy broadcasting, and the
-    payload-invariant pieces (zigzag map, DCT basis, bit-reader
-    class) build once per task in this closure instead of per image —
-    decoded bytes are bit-identical (same float ops per 8x8 block,
-    same order)."""
-    import struct as _struct
+class _BitReader:
+    """MSB-first reader over the de-stuffed entropy stream."""
 
-    import numpy as _np
+    def __init__(self, data: bytes) -> None:
+        self.d = data
+        self.p = 0
+        self.n = len(data) * 8
 
-    zz = [
-        (r, c)
-        for d in range(15)
-        for r, c in (
-            [(r_, d - r_) for r_ in range(max(0, d - 7), min(d, 7) + 1)]
-            if d % 2 == 1
-            else [
-                (r_, d - r_)
-                for r_ in reversed(range(max(0, d - 7), min(d, 7) + 1))
-            ]
-        )
-    ]
-    # flat dezigzag map: natural-order index of zigzag position k
-    zz_flat = _np.array([r * 8 + c for r, c in zz], dtype=_np.int64)
-    m = _dct_basis()
+    def bit(self) -> int:
+        b = (self.d[self.p >> 3] >> (7 - (self.p & 7))) & 1
+        self.p += 1
+        return b
 
-    class _Bits:
-        def __init__(self, data: bytes) -> None:
-            self.d = data
-            self.p = 0
-            self.n = len(data) * 8
+    def bits(self, n: int) -> int:
+        # multi-bit MSB-first extraction (r17): same values and the
+        # same IndexError on a past-end read as the per-bit loop
+        p = self.p
+        end = p + n
+        if end > self.n:
+            raise IndexError("index out of range")
+        chunk = int.from_bytes(self.d[p >> 3 : (end + 7) >> 3], "big")
+        self.p = end
+        nb = ((end + 7) >> 3 << 3) - (p >> 3 << 3)
+        return (chunk >> (nb - (p & 7) - n)) & ((1 << n) - 1)
 
-        def bit(self) -> int:
-            b = (self.d[self.p >> 3] >> (7 - (self.p & 7))) & 1
-            self.p += 1
-            return b
 
-        def bits(self, n: int) -> int:
-            # multi-bit MSB-first extraction (r17): same values
-            # and the same IndexError on a past-end read as the
-            # per-bit loop
-            p = self.p
-            end = p + n
-            if end > self.n:
-                raise IndexError("index out of range")
-            chunk = int.from_bytes(self.d[p >> 3 : (end + 7) >> 3], "big")
-            self.p = end
-            nb = ((end + 7) >> 3 << 3) - (p >> 3 << 3)
-            return (chunk >> (nb - (p & 7) - n)) & ((1 << n) - 1)
+def _read_huff(br: _BitReader, table: dict, lut: list) -> int:
+    p = br.p
+    if p + 9 <= br.n:
+        chunk = int.from_bytes(br.d[p >> 3 : (p + 16) >> 3], "big")
+        nb = (((p + 16) >> 3) - (p >> 3)) * 8
+        entry = lut[(chunk >> (nb - (p & 7) - 9)) & 0x1FF]
+        if entry is not None:
+            br.p = p + entry[1]
+            return entry[0]
+    code, ln_ = 0, 0
+    while ln_ < 16:
+        code = (code << 1) | br.bit()
+        ln_ += 1
+        sym = table.get((ln_, code))
+        if sym is not None:
+            return sym
+    raise ValueError("invalid huffman code")
 
-    def read_huff(br, table, lut):
-        p = br.p
-        if p + 9 <= br.n:
-            chunk = int.from_bytes(br.d[p >> 3 : (p + 16) >> 3], "big")
-            nb = (((p + 16) >> 3) - (p >> 3)) * 8
-            entry = lut[(chunk >> (nb - (p & 7) - 9)) & 0x1FF]
-            if entry is not None:
-                br.p = p + entry[1]
-                return entry[0]
-        code, ln_ = 0, 0
-        while ln_ < 16:
-            code = (code << 1) | br.bit()
-            ln_ += 1
-            sym = table.get((ln_, code))
-            if sym is not None:
-                return sym
-        raise ValueError("invalid huffman code")
 
-    def extend(v: int, s: int) -> int:
-        return v if v >= (1 << (s - 1)) else v - (1 << s) + 1
-
-    def decode(payload: bytes):
-        if payload[:2] != b"\xff\xd8":
-            raise ValueError("not a JPEG: missing SOI")
-        pos = 2
-        qtables: dict[int, _np.ndarray] = {}
-        htables: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
-        hluts: dict[tuple[int, int], list] = {}
-        width = height = None
-        comps: list[tuple[int, int]] = []  # (component id, qtable id)
-        scan_tables: list[tuple[int, int]] = []  # (dc table, ac table)
-        entropy = None
-
-        while pos + 4 <= len(payload):
-            if payload[pos] != 0xFF:
-                raise ValueError("marker desync")
-            marker = payload[pos + 1]
-            if marker == 0xD9:  # EOI
-                break
-            (ln,) = _struct.unpack(">H", payload[pos + 2 : pos + 4])
-            body = payload[pos + 4 : pos + 2 + ln]
-            if marker == 0xDB:  # DQT (possibly several tables)
-                bp = 0
-                while bp < len(body):
-                    pq, tq = body[bp] >> 4, body[bp] & 15
-                    if pq != 0:
-                        raise ValueError("only 8-bit quant tables")
-                    vals = list(body[bp + 1 : bp + 65])
-                    tab = _np.zeros(64, dtype=_np.int64)
-                    tab[zz_flat] = vals  # dezigzag, one assignment
-                    qtables[tq] = tab.reshape(8, 8)
-                    bp += 65
-            elif marker == 0xC0:  # SOF0 baseline
-                prec, height, width, nc = _struct.unpack(">BHHB", body[:6])
-                if prec != 8:
-                    raise ValueError("only 8-bit precision")
-                for i in range(nc):
-                    cid, hv, tq = body[6 + 3 * i : 9 + 3 * i]
-                    if hv != 0x11:
-                        raise ValueError(
-                            "only 1x1 sampling supported (no subsampling)"
-                        )
-                    comps.append((cid, tq))
-            elif marker in (0xC1, 0xC2, 0xC3):
-                raise ValueError("only baseline SOF0 supported")
-            elif marker == 0xC4:  # DHT (possibly several tables)
-                bp = 0
-                while bp < len(body):
-                    tc, th = body[bp] >> 4, body[bp] & 15
-                    bits = list(body[bp + 1 : bp + 17])
-                    nv = sum(bits)
-                    vals = list(body[bp + 17 : bp + 17 + nv])
-                    table: dict[tuple[int, int], int] = {}
-                    code, k = 0, 0
-                    for li, n in enumerate(bits):
-                        for _ in range(n):
-                            table[(li + 1, code)] = vals[k]
-                            code += 1
-                            k += 1
-                        code <<= 1
-                    htables[(tc, th)] = table
-                    # 9-bit peek LUT (r17): index = the next 9 stream
-                    # bits MSB-first; entry = (symbol, code length)
-                    # for codes of <= 9 bits, None -> slow path.
-                    lut = [None] * 512
-                    for (ln_, code_), sym_ in table.items():
-                        if ln_ <= 9:
-                            start = code_ << (9 - ln_)
-                            lut[start : start + (1 << (9 - ln_))] = [
-                                (sym_, ln_)
-                            ] * (1 << (9 - ln_))
-                    hluts[(tc, th)] = lut
-                    bp += 17 + nv
-            elif marker == 0xDA:  # SOS, then entropy data to EOI
-                ns = body[0]
-                for i in range(ns):
-                    scan_tables.append(
-                        (body[2 + 2 * i] >> 4, body[2 + 2 * i] & 15)
-                    )
-                ep = pos + 2 + ln
-                raw = bytearray()
-                while ep < len(payload):
-                    byte = payload[ep]
-                    if byte == 0xFF:
-                        nxt = payload[ep + 1]
-                        if nxt == 0x00:
-                            raw.append(0xFF)
-                            ep += 2
-                            continue
-                        if 0xD0 <= nxt <= 0xD7:
-                            raise ValueError("restart markers unsupported")
-                        break  # a real marker ends the scan
-                    raw.append(byte)
-                    ep += 1
-                entropy = bytes(raw)
-                pos = ep
-                continue
-            pos += 2 + ln
-        if width is None or entropy is None or not comps:
-            raise ValueError("missing SOF0/SOS")
-
-        nbx, nby = (width + 7) // 8, (height + 7) // 8
-        br = _Bits(entropy)
-        preds = [0] * len(comps)
-        ncomp = len(comps)
-        # sequential entropy scan collects every block's zigzag
-        # coefficients; dezigzag/dequant/IDCT happen batched below
-        rows: list[list[int]] = []
-        for by in range(nby):
-            for bx in range(nbx):
-                for ci, (cid, tq) in enumerate(comps):
-                    dct_id, act_id = scan_tables[ci]
-                    dc_t = htables[(0, dct_id)]
-                    dc_l = hluts[(0, dct_id)]
-                    ac_t = htables[(1, act_id)]
-                    ac_l = hluts[(1, act_id)]
-                    seq = [0] * 64
-                    s = read_huff(br, dc_t, dc_l)
-                    diff = extend(br.bits(s), s) if s else 0
-                    preds[ci] += diff
-                    seq[0] = preds[ci]
-                    k = 1
-                    while k < 64:
-                        sym = read_huff(br, ac_t, ac_l)
-                        if sym == 0x00:  # EOB
-                            break
-                        run, size = sym >> 4, sym & 15
-                        if size == 0:
-                            if run != 15:
-                                raise ValueError("bad AC symbol")
-                            k += 16  # ZRL
-                            continue
-                        k += run
-                        if k > 63:
-                            raise ValueError("AC index overflow")
-                        seq[k] = extend(br.bits(size), size)
-                        k += 1
-                    rows.append(seq)
-        zigzag = _np.array(rows, dtype=_np.float64).reshape(-1, 64)
-        out_planes = []
-        for ci, (cid, tq) in enumerate(comps):
-            sub = zigzag[ci::ncomp]  # this component's blocks, scan order
-            blocks = _np.zeros((len(sub), 64), dtype=_np.float64)
-            blocks[:, zz_flat] = sub  # dezigzag, all blocks at once
-            blocks = blocks.reshape(-1, 8, 8)
-            blocks *= qtables[tq]  # same elementwise dequant per block
-            idct = m.T @ blocks @ m + 128.0  # batched 8x8 matmuls
-            out_planes.append(
-                idct.reshape(nby, nbx, 8, 8)
-                .transpose(0, 2, 1, 3)
-                .reshape(nby * 8, nbx * 8)
-            )
-        planes = [
-            _np.clip(_np.round(p[:height, :width]), 0, 255)
-            for p in out_planes
-        ]
-        if len(planes) == 1:
-            gray = planes[0].astype(_np.uint8)
-            return width, height, _np.repeat(gray[..., None], 3, axis=2)
-        y, cb, cr = planes
-        r = y + 1.402 * (cr - 128.0)
-        g = y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0)
-        b = y + 1.772 * (cb - 128.0)
-        rgb = _np.stack(
-            [
-                _np.clip(_np.round(ch), 0, 255).astype(_np.uint8)
-                for ch in (r, g, b)
-            ],
-            axis=2,
-        )
-        return width, height, rgb
-
-    return decode
+def _extend(v: int, s: int) -> int:
+    return v if v >= (1 << (s - 1)) else v - (1 << s) + 1
 
 
 def decode_jpeg(payload: bytes) -> "np.ndarray":
-    """Parse baseline-JPEG bytes -> (height, width, 3) uint8 array
-    (huffman + dequant + IDCT + YCbCr; see _make_jpeg_decoder)."""
-    _, _, arr = _make_jpeg_decoder()(payload)
-    return arr
+    """Parse baseline-JPEG bytes -> (height, width, 3) uint8 array.
+    REAL decode, stdlib + numpy only: marker walk (DQT/SOF0/DHT/SOS,
+    APPn/COM skipped), canonical huffman decode of the de-stuffed
+    entropy stream, DC prediction + receive/extend, dequantize,
+    dezigzag, matrix IDCT, level shift, YCbCr->RGB. Supported subset:
+    8-bit SOF0, 1 or 3 components, 1x1 sampling, no restart markers —
+    anything else raises.
+
+    r17 (guide §4.2, §4.5): the entropy scan still decodes
+    symbol-by-symbol (inherently sequential), but bit reads are
+    multi-bit extractions, huffman tables get a 9-bit peek LUT, and
+    the per-block dezigzag/dequantize/IDCT runs ONCE, batched over
+    every block of a component with numpy broadcasting — same float
+    ops per 8x8 block, same order, so decoded bytes are bit-identical
+    to the per-block decoder."""
+    if payload[:2] != b"\xff\xd8":
+        raise ValueError("not a JPEG: missing SOI")
+    pos = 2
+    qtables: dict[int, np.ndarray] = {}
+    htables: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
+    hluts: dict[tuple[int, int], list] = {}
+    width = height = None
+    comps: list[tuple[int, int]] = []  # (component id, qtable id)
+    scan_tables: list[tuple[int, int]] = []  # (dc table, ac table)
+    entropy = None
+
+    while pos + 4 <= len(payload):
+        if payload[pos] != 0xFF:
+            raise ValueError("marker desync")
+        marker = payload[pos + 1]
+        if marker == 0xD9:  # EOI
+            break
+        (ln,) = struct.unpack(">H", payload[pos + 2 : pos + 4])
+        body = payload[pos + 4 : pos + 2 + ln]
+        if marker == 0xDB:  # DQT (possibly several tables)
+            bp = 0
+            while bp < len(body):
+                pq, tq = body[bp] >> 4, body[bp] & 15
+                if pq != 0:
+                    raise ValueError("only 8-bit quant tables")
+                vals = list(body[bp + 1 : bp + 65])
+                tab = np.zeros(64, dtype=np.int64)
+                tab[_ZZ_FLAT] = vals  # dezigzag, one assignment
+                qtables[tq] = tab.reshape(8, 8)
+                bp += 65
+        elif marker == 0xC0:  # SOF0 baseline
+            prec, height, width, nc = struct.unpack(">BHHB", body[:6])
+            if prec != 8:
+                raise ValueError("only 8-bit precision")
+            for i in range(nc):
+                cid, hv, tq = body[6 + 3 * i : 9 + 3 * i]
+                if hv != 0x11:
+                    raise ValueError("only 1x1 sampling supported (no subsampling)")
+                comps.append((cid, tq))
+        elif marker in (0xC1, 0xC2, 0xC3):
+            raise ValueError("only baseline SOF0 supported")
+        elif marker == 0xC4:  # DHT (possibly several tables)
+            bp = 0
+            while bp < len(body):
+                tc, th = body[bp] >> 4, body[bp] & 15
+                bits = list(body[bp + 1 : bp + 17])
+                nv = sum(bits)
+                vals = list(body[bp + 17 : bp + 17 + nv])
+                table: dict[tuple[int, int], int] = {}
+                code, k = 0, 0
+                for li, n in enumerate(bits):
+                    for _ in range(n):
+                        table[(li + 1, code)] = vals[k]
+                        code += 1
+                        k += 1
+                    code <<= 1
+                htables[(tc, th)] = table
+                # 9-bit peek LUT (r17): index = the next 9 stream bits
+                # MSB-first; entry = (symbol, code length) for codes of
+                # <= 9 bits, None -> slow path.
+                lut = [None] * 512
+                for (ln_, code_), sym_ in table.items():
+                    if ln_ <= 9:
+                        start = code_ << (9 - ln_)
+                        lut[start : start + (1 << (9 - ln_))] = [(sym_, ln_)] * (
+                            1 << (9 - ln_)
+                        )
+                hluts[(tc, th)] = lut
+                bp += 17 + nv
+        elif marker == 0xDA:  # SOS, then entropy data to EOI
+            ns = body[0]
+            for i in range(ns):
+                scan_tables.append((body[2 + 2 * i] >> 4, body[2 + 2 * i] & 15))
+            ep = pos + 2 + ln
+            raw = bytearray()
+            while ep < len(payload):
+                byte = payload[ep]
+                if byte == 0xFF:
+                    nxt = payload[ep + 1]
+                    if nxt == 0x00:
+                        raw.append(0xFF)
+                        ep += 2
+                        continue
+                    if 0xD0 <= nxt <= 0xD7:
+                        raise ValueError("restart markers unsupported")
+                    break  # a real marker ends the scan
+                raw.append(byte)
+                ep += 1
+            entropy = bytes(raw)
+            pos = ep
+            continue
+        pos += 2 + ln
+    if width is None or entropy is None or not comps:
+        raise ValueError("missing SOF0/SOS")
+
+    nbx, nby = (width + 7) // 8, (height + 7) // 8
+    br = _BitReader(entropy)
+    preds = [0] * len(comps)
+    ncomp = len(comps)
+    # sequential entropy scan collects every block's zigzag
+    # coefficients; dezigzag/dequant/IDCT happen batched below
+    rows: list[list[int]] = []
+    for by in range(nby):
+        for bx in range(nbx):
+            for ci in range(ncomp):
+                dct_id, act_id = scan_tables[ci]
+                dc_t = htables[(0, dct_id)]
+                dc_l = hluts[(0, dct_id)]
+                ac_t = htables[(1, act_id)]
+                ac_l = hluts[(1, act_id)]
+                seq = [0] * 64
+                s = _read_huff(br, dc_t, dc_l)
+                diff = _extend(br.bits(s), s) if s else 0
+                preds[ci] += diff
+                seq[0] = preds[ci]
+                k = 1
+                while k < 64:
+                    sym = _read_huff(br, ac_t, ac_l)
+                    if sym == 0x00:  # EOB
+                        break
+                    run, size = sym >> 4, sym & 15
+                    if size == 0:
+                        if run != 15:
+                            raise ValueError("bad AC symbol")
+                        k += 16  # ZRL
+                        continue
+                    k += run
+                    if k > 63:
+                        raise ValueError("AC index overflow")
+                    seq[k] = _extend(br.bits(size), size)
+                    k += 1
+                rows.append(seq)
+    zigzag = np.array(rows, dtype=np.float64).reshape(-1, 64)
+    out_planes = []
+    for ci, (_cid, tq) in enumerate(comps):
+        sub = zigzag[ci::ncomp]  # this component's blocks, scan order
+        blocks = np.zeros((len(sub), 64), dtype=np.float64)
+        blocks[:, _ZZ_FLAT] = sub  # dezigzag, all blocks at once
+        blocks = blocks.reshape(-1, 8, 8)
+        blocks *= qtables[tq]  # same elementwise dequant per block
+        idct = _DCT_M.T @ blocks @ _DCT_M + 128.0  # batched 8x8 matmuls
+        out_planes.append(
+            idct.reshape(nby, nbx, 8, 8).transpose(0, 2, 1, 3).reshape(nby * 8, nbx * 8)
+        )
+    planes = [np.clip(np.round(p[:height, :width]), 0, 255) for p in out_planes]
+    if len(planes) == 1:
+        gray = planes[0].astype(np.uint8)
+        return np.repeat(gray[..., None], 3, axis=2)
+    y, cb, cr = planes
+    r = y + 1.402 * (cr - 128.0)
+    g = y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0)
+    b = y + 1.772 * (cb - 128.0)
+    return np.stack(
+        [np.clip(np.round(ch), 0, 255).astype(np.uint8) for ch in (r, g, b)], axis=2
+    )
 
 
 def jpeg_stats(
@@ -1142,10 +1038,10 @@ def jpeg_stats(
     path_col: str = "path",
     id_pattern: str = r"jpg_(\d+)\.jpg$",
 ) -> DataFrame:
-    """Decode baseline-JPEG payloads -> per-image stats (shared lane
-    with the PPM/PNG paths; only the decoder differs)."""
-    return _decoded_image_stats(
-        df, _make_jpeg_decoder(), content_col, path_col, id_pattern
+    """Decode baseline-JPEG payloads -> per-image stats (the PPM lane
+    with the JPEG decoder)."""
+    return payload_lane(
+        df, decode_jpeg, _channel_means, _STATS_SCHEMA, id_pattern, content_col, path_col
     )
 
 
@@ -1163,27 +1059,18 @@ def extract_features(
 
     Batch shape contract: the iterator yields pandas DataFrames whose
     rows align with the input batch; we append an array<double> column
-    and pass every other column through untouched.
-
-    The batch closure is deliberately self-contained (imports inside,
-    no module-level references): cloudpickle then ships it by value,
-    so executors never need sas_etl_spark importable — the engine may
-    be driven from any cwd (session.configure additionally ships the
-    package zip for UDFs that do close over module code).
+    and pass every other column through untouched (which is why this
+    lane is not a payload_lane). Executors import _fake_features from
+    the shipped package, like every codec lane.
     """
+    _ship_package(df.sparkSession)
     out_schema = f"{', '.join(f'{f.name} {f.dataType.simpleString()}' for f in df.schema.fields)}, {out_col} array<double>"
 
     def per_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib as _hashlib
-
-        def feats(p: bytes) -> list[float]:
-            h = _hashlib.sha256(p).digest()
-            return [b / 255.0 for b in h[:dim]]
-
         for pdf in batches:
             payloads = pdf[media_col].map(lambda m: bytes(m["payload"]))
             pdf = pdf.copy()
-            pdf[out_col] = payloads.map(feats)
+            pdf[out_col] = payloads.map(lambda p: _fake_features(p, dim))
             yield pdf
 
     return df.mapInPandas(per_batch, schema=out_schema)
@@ -1202,8 +1089,6 @@ def wav_bytes(n_samples: int, rate: int, clip_idx: int) -> bytes:
     """Deterministic mono 16-bit PCM WAV: sample k has value
     ((clip_idx*31 + k*17) mod 20011) - 10005 — integer arithmetic an
     SQL oracle recomputes exactly, amplitude within int16 range."""
-    import struct
-
     k = np.arange(n_samples, dtype=np.int64)
     samples = (((clip_idx * 31 + k * 17) % 20011) - 10005).astype("<i2")
     payload = samples.tobytes()
@@ -1229,52 +1114,39 @@ def write_wav_fixture(out_dir: str, n_clips: int = 48, rate: int = 8000) -> None
             f.write(wav_bytes(n, rate, i))
 
 
-def _make_wav_decoder():
-    """Build the validated RIFF/WAVE decoder as a NESTED function —
-    same rationale as _make_ppm_decoder: cloudpickle ships it by
-    value into executor closures, and every consumer (decode_wav,
-    audio_stats) runs the SAME validation. The previous inline copy
-    in audio_stats skipped the fmt-code/bit-depth checks, so a
-    24-bit/float/compressed WAV would have been frombuffer'd as int16
-    garbage instead of raising."""
-
-    def decode(payload: bytes):
-        import struct as _struct
-
-        import numpy as _np
-
-        if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-            raise ValueError("not a RIFF/WAVE payload")
-        pos, rate, channels, bits = 12, None, None, None
-        while pos + 8 <= len(payload):
-            cid = payload[pos : pos + 4]
-            (size,) = _struct.unpack_from("<I", payload, pos + 4)
-            body = pos + 8
-            if cid == b"fmt ":
-                fmt_code, channels, rate = _struct.unpack_from("<HHI", payload, body)
-                (bits,) = _struct.unpack_from("<H", payload, body + 14)
-                if fmt_code != 1 or bits != 16:
-                    raise ValueError(
-                        f"only 16-bit PCM supported (fmt={fmt_code}, bits={bits})"
-                    )
-            elif cid == b"data":
-                if rate is None:
-                    raise ValueError("data chunk before fmt chunk")
-                samples = _np.frombuffer(
-                    payload, dtype="<i2", count=size // 2, offset=body
-                )
-                return rate, channels, samples
-            pos = body + size + (size & 1)  # chunks are word-aligned
-        raise ValueError("no data chunk found")
-
-    return decode
-
-
 def decode_wav(payload: bytes) -> tuple[int, int, "np.ndarray"]:
     """Parse RIFF/WAVE bytes -> (rate, n_channels, int16 samples).
-    Real decode: chunk walk (fmt then data, skipping unknown chunks),
-    then a zero-copy frombuffer of the PCM plane."""
-    return _make_wav_decoder()(payload)
+    Real decode: chunk walk (fmt then data, skipping unknown chunks,
+    fmt code and bit depth validated so a 24-bit/float/compressed WAV
+    raises instead of reading as int16 garbage), then a zero-copy
+    frombuffer of the PCM plane."""
+    if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
+        raise ValueError("not a RIFF/WAVE payload")
+    pos, rate, channels, bits = 12, None, None, None
+    while pos + 8 <= len(payload):
+        cid = payload[pos : pos + 4]
+        (size,) = struct.unpack_from("<I", payload, pos + 4)
+        body = pos + 8
+        if cid == b"fmt ":
+            fmt_code, channels, rate = struct.unpack_from("<HHI", payload, body)
+            (bits,) = struct.unpack_from("<H", payload, body + 14)
+            if fmt_code != 1 or bits != 16:
+                raise ValueError(
+                    f"only 16-bit PCM supported (fmt={fmt_code}, bits={bits})"
+                )
+        elif cid == b"data":
+            if rate is None:
+                raise ValueError("data chunk before fmt chunk")
+            samples = np.frombuffer(payload, dtype="<i2", count=size // 2, offset=body)
+            return rate, channels, samples
+        pos = body + size + (size & 1)  # chunks are word-aligned
+    raise ValueError("no data chunk found")
+
+
+def _audio_row(clip_id: int, decoded: tuple) -> tuple:
+    rate, _channels, s = decoded
+    x = s.astype(np.float64)
+    return clip_id, rate, len(s), float(x.mean()), float(np.sqrt((x * x).mean()))
 
 
 def audio_stats(
@@ -1284,42 +1156,18 @@ def audio_stats(
     id_pattern: str = r"clip_(\d+)\.wav$",
 ) -> DataFrame:
     """Decode WAV payloads -> per-clip (clip_id, sample_rate,
-    n_samples, mean amplitude, RMS) via mapInPandas — the audio twin
-    of image_stats. Integer sample sums stay far under 2^53, so the
-    double means/RMS are bit-reproducible by the SQL oracle."""
-
-    decode = _make_wav_decoder()
-
-    def per_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import re as _re
-
-        import numpy as _np
-
-        pat = _re.compile(id_pattern)
-        for pdf in batches:
-            out = {
-                "clip_id": [],
-                "sample_rate": [],
-                "n_samples": [],
-                "mean_amp": [],
-                "rms": [],
-            }
-            for path, content in zip(pdf[path_col], pdf[content_col]):
-                rate, _channels, s = decode(bytes(content))
-                x = s.astype(_np.float64)
-                m = pat.search(path)
-                out["clip_id"].append(int(m.group(1)) if m else -1)
-                out["sample_rate"].append(rate)
-                out["n_samples"].append(len(s))
-                out["mean_amp"].append(float(x.mean()))
-                out["rms"].append(float(_np.sqrt((x * x).mean())))
-            yield pd.DataFrame(out)
-
-    schema = (
-        "clip_id long, sample_rate int, n_samples long, "
-        "mean_amp double, rms double"
+    n_samples, mean amplitude, RMS) — the audio twin of image_stats.
+    Integer sample sums stay far under 2^53, so the double means/RMS
+    are bit-reproducible by the SQL oracle."""
+    return payload_lane(
+        df,
+        decode_wav,
+        _audio_row,
+        "clip_id long, sample_rate int, n_samples long, mean_amp double, rms double",
+        id_pattern,
+        content_col,
+        path_col,
     )
-    return df.mapInPandas(per_batch, schema=schema)
 
 
 def resize_nearest(arr: "np.ndarray", out_w: int, out_h: int) -> "np.ndarray":
@@ -1333,6 +1181,11 @@ def resize_nearest(arr: "np.ndarray", out_w: int, out_h: int) -> "np.ndarray":
     return arr[ys[:, None], xs[None, :], :]
 
 
+def _resized_means(img_id: int, arr: "np.ndarray", out_w: int, out_h: int) -> tuple:
+    means = resize_nearest(arr, out_w, out_h).astype(np.float64).mean(axis=(0, 1))
+    return img_id, float(means[0]), float(means[1]), float(means[2])
+
+
 def image_resized_stats(
     df: DataFrame,
     out_w: int,
@@ -1342,36 +1195,17 @@ def image_resized_stats(
     id_pattern: str = r"img_(\d+)\.ppm$",
 ) -> DataFrame:
     """Decode PPM -> nearest-neighbor resize to (out_w, out_h) ->
-    per-channel means of the RESIZED pixels, via mapInPandas. The
-    resize happens inside the Arrow batch loop — the thumbnail-stage
-    shape of an image-ingest pipeline. The resize index math mirrors
-    resize_nearest (kept inline: two lines vs a by-reference pickle
-    dependency on the package being importable on executors)."""
-    decode = _make_ppm_decoder()
-
-    def per_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import re as _re
-
-        import numpy as _np
-
-        pat = _re.compile(id_pattern)
-        for pdf in batches:
-            out = {"img_id": [], "mean_r": [], "mean_g": [], "mean_b": []}
-            for path, content in zip(pdf[path_col], pdf[content_col]):
-                w, h, arr = decode(bytes(content))
-                xs = (_np.arange(out_w, dtype=_np.int64) * w) // out_w
-                ys = (_np.arange(out_h, dtype=_np.int64) * h) // out_h
-                small = arr[ys[:, None], xs[None, :], :]
-                means = small.astype(_np.float64).mean(axis=(0, 1))
-                m = pat.search(path)
-                out["img_id"].append(int(m.group(1)) if m else -1)
-                out["mean_r"].append(float(means[0]))
-                out["mean_g"].append(float(means[1]))
-                out["mean_b"].append(float(means[2]))
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(
-        per_batch, schema="img_id long, mean_r double, mean_g double, mean_b double"
+    per-channel means of the RESIZED pixels. The resize happens inside
+    the Arrow batch loop — the thumbnail-stage shape of an
+    image-ingest pipeline."""
+    return payload_lane(
+        df,
+        decode_ppm,
+        partial(_resized_means, out_w=out_w, out_h=out_h),
+        "img_id long, mean_r double, mean_g double, mean_b double",
+        id_pattern,
+        content_col,
+        path_col,
     )
 
 
@@ -1412,6 +1246,43 @@ def write_y4m_fixture(out_dir: str, n_clips: int = 24) -> None:
             f.write(y4m_bytes(8, 6, n, i))
 
 
+def decode_y4m(payload: bytes) -> list["np.ndarray"]:
+    """Parse a Y4M C444 stream -> list of (3, height, width) uint8
+    frames (planar Y, Cb, Cr). Real container work: stream header
+    tokens, then one FRAME marker + raw planes per frame."""
+    nl = payload.index(b"\n")
+    header = payload[:nl].decode()
+    if not header.startswith("YUV4MPEG2"):
+        raise ValueError("not a YUV4MPEG2 stream")
+    w = h = None
+    for tok in header.split()[1:]:
+        if tok[0] == "W":
+            w = int(tok[1:])
+        elif tok[0] == "H":
+            h = int(tok[1:])
+        elif tok[0] == "C" and tok[1:] != "444":
+            raise ValueError(f"only C444 supported, got {tok}")
+    plane, pos, frames = w * h, nl + 1, []
+    while pos < len(payload):
+        fnl = payload.index(b"\n", pos)
+        if payload[pos:fnl].split()[0] != b"FRAME":
+            raise ValueError("expected FRAME marker")
+        body = fnl + 1
+        frames.append(
+            np.frombuffer(payload, dtype=np.uint8, count=3 * plane, offset=body).reshape(
+                3, h, w
+            )
+        )
+        pos = body + 3 * plane
+    return frames
+
+
+def _frame_sample_row(clip_id: int, frames: list, every_k: int) -> tuple:
+    sampled = frames[::every_k]
+    luma = np.stack([f[0] for f in sampled]).astype(np.float64)
+    return clip_id, len(frames), len(sampled), float(luma.mean())
+
+
 def video_frame_sample_stats(
     df: DataFrame,
     every_k: int = 3,
@@ -1420,62 +1291,16 @@ def video_frame_sample_stats(
     id_pattern: str = r"vid_(\d+)\.y4m$",
 ) -> DataFrame:
     """Parse Y4M container -> sample every k-th frame (0, k, 2k, ...)
-    -> per-clip frame counts + mean luma of SAMPLED frames, via
-    mapInPandas. Frame-sampling is the standard decimation step of a
+    -> per-clip frame counts + mean luma of SAMPLED frames.
+    Frame-sampling is the standard decimation step of a
     video-training pipeline; sampling before feature extraction is
     what keeps 100 TB of video tractable."""
-
-    def per_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import re as _re
-
-        import numpy as _np
-
-        def decode(payload: bytes):
-            nl = payload.index(b"\n")
-            header = payload[:nl].decode()
-            if not header.startswith("YUV4MPEG2"):
-                raise ValueError("not a YUV4MPEG2 stream")
-            w = h = None
-            for tok in header.split()[1:]:
-                if tok[0] == "W":
-                    w = int(tok[1:])
-                elif tok[0] == "H":
-                    h = int(tok[1:])
-                elif tok[0] == "C" and tok[1:] != "444":
-                    raise ValueError(f"only C444 supported, got {tok}")
-            plane, pos, frames = w * h, nl + 1, []
-            while pos < len(payload):
-                fnl = payload.index(b"\n", pos)
-                if payload[pos:fnl].split()[0] != b"FRAME":
-                    raise ValueError("expected FRAME marker")
-                body = fnl + 1
-                frames.append(
-                    _np.frombuffer(payload, dtype=_np.uint8, count=3 * plane, offset=body)
-                    .reshape(3, h, w)
-                )
-                pos = body + 3 * plane
-            return w, h, frames
-
-        pat = _re.compile(id_pattern)
-        for pdf in batches:
-            out = {
-                "clip_id": [],
-                "n_frames": [],
-                "n_sampled": [],
-                "mean_luma_sampled": [],
-            }
-            for path, content in zip(pdf[path_col], pdf[content_col]):
-                w, h, frames = decode(bytes(content))
-                sampled = frames[::every_k]
-                luma = _np.stack([f[0] for f in sampled]).astype(_np.float64)
-                m = pat.search(path)
-                out["clip_id"].append(int(m.group(1)) if m else -1)
-                out["n_frames"].append(len(frames))
-                out["n_sampled"].append(len(sampled))
-                out["mean_luma_sampled"].append(float(luma.mean()))
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(
-        per_batch,
-        schema="clip_id long, n_frames long, n_sampled long, mean_luma_sampled double",
+    return payload_lane(
+        df,
+        decode_y4m,
+        partial(_frame_sample_row, every_k=every_k),
+        "clip_id long, n_frames long, n_sampled long, mean_luma_sampled double",
+        id_pattern,
+        content_col,
+        path_col,
     )

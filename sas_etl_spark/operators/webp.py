@@ -51,18 +51,31 @@ Scope (documented precisely, the house rule for codec lanes):
   on such hosts EVERY WebP decodes; on bare hosts the lossy gate
   raises explicitly while lossless VP8L still decodes natively.
 
-The Spark-facing `webp_stats` lane is attested: `q_webp_features`
-(queries/io_stream.py) writes the six-configuration VP8L fixture,
-decodes it through this module inside mapInPandas, and hash-matches
-the pure-SQL pixel oracle (green in history/CORRECTNESS_r14.json).
+The Spark-facing `webp_stats` and `webp_lossy_error_stats` lanes are
+`multimodal.payload_lane` calls: executors import `decode_webp` /
+`decode_webp_system` from the package zip that `session._ship_package`
+adds to every Python worker, which `payload_lane` ensures.
+`q_webp_features` (queries/io_stream.py) writes the six-configuration
+VP8L fixture, decodes it through that lane, and hash-matches the
+pure-SQL pixel oracle.
 """
 
 from __future__ import annotations
 
+import ctypes
+import functools
 import struct
 
 import numpy as np
 from pyspark.sql import DataFrame
+
+from sas_etl_spark.operators.multimodal import (
+    _ERROR_SCHEMA,
+    _STATS_SCHEMA,
+    _channel_means,
+    _gradient_error_row,
+    payload_lane,
+)
 
 # ---------------------------------------------------------------------
 # Bit I/O. VP8L packs bits LSB-first within each byte; ReadBits(n)
@@ -727,12 +740,12 @@ def _palette_width_bits(palette_size: int) -> int:
     return 0
 
 
+@functools.cache
 def _load_system_libwebp():
     """The OS-level reference codec, when the image ships it (this
     container does: libwebp.so.7). ctypes only — no Python codec
-    package. Returns None when absent; callers gate on that."""
-    import ctypes
-
+    package. Returns None when absent; callers gate on that. Cached:
+    one dlopen and signature setup per process, not per image."""
     for name in (
         "libwebp.so.7", "libwebp.so", "libwebp.7.dylib", "libwebp.dylib"
     ):
@@ -747,6 +760,15 @@ def _load_system_libwebp():
             ctypes.POINTER(ctypes.c_int),
             ctypes.POINTER(ctypes.c_int),
         ]
+        lib.WebPEncodeRGB.restype = ctypes.c_size_t
+        lib.WebPEncodeRGB.argtypes = [
+            ctypes.c_char_p,
+            ctypes.c_int,
+            ctypes.c_int,
+            ctypes.c_int,
+            ctypes.c_float,
+            ctypes.POINTER(ctypes.POINTER(ctypes.c_uint8)),
+        ]
         lib.WebPFree.argtypes = [ctypes.c_void_p]
         return lib
     return None
@@ -759,8 +781,6 @@ def decode_webp_system(payload: bytes) -> "np.ndarray":
     decoder cannot cover (VP8's boolean arithmetic coder + intra
     prediction); it raises when the OS image lacks the library, which
     keeps the gate explicit rather than silently absent."""
-    import ctypes
-
     lib = _load_system_libwebp()
     if lib is None:
         raise NotImplementedError(
@@ -1541,23 +1561,12 @@ def encode_webp_lossy_system(arr: "np.ndarray", quality: float = 80.0) -> bytes:
     system libwebp (WebPEncodeRGB). Fixture-side only — the data path
     never encodes — and gated exactly like decode_webp_system: raises
     the documented NotImplementedError on hosts without the library."""
-    import ctypes
-
     lib = _load_system_libwebp()
     if lib is None:
         raise NotImplementedError(
             "lossy WebP encoding needs the system libwebp shared "
             "library, which this host does not ship"
         )
-    lib.WebPEncodeRGB.restype = ctypes.c_size_t
-    lib.WebPEncodeRGB.argtypes = [
-        ctypes.c_char_p,
-        ctypes.c_int,
-        ctypes.c_int,
-        ctypes.c_int,
-        ctypes.c_float,
-        ctypes.POINTER(ctypes.POINTER(ctypes.c_uint8)),
-    ]
     h, w, _ = arr.shape
     out = ctypes.POINTER(ctypes.c_uint8)()
     n = lib.WebPEncodeRGB(
@@ -1606,131 +1615,19 @@ def webp_lossy_error_stats(
     id_pattern: str = r"lossy_(\d+)\.webp$",
 ) -> DataFrame:
     """Decode lossy-WebP payloads through the system libwebp ON THE
-    EXECUTORS and measure decoded pixels against the analytic source
-    regenerated inside the kernel -> (img_id, width, height,
-    max_abs_err, mean_abs_err*1e6 as exact long) — the
-    jpeg_gradient_error_stats recipe for the VP8 lane. The kernel
-    loads libwebp via ctypes per task (nothing repo-local is
-    imported on the executor) and raises the documented gate error
-    where the OS lacks the library."""
-
-    def run(batches):
-        import ctypes as _ct
-        import re as _re
-
-        import numpy as _np
-        import pandas as _pd
-
-        lib = None
-        for _name in (
-            "libwebp.so.7", "libwebp.so", "libwebp.7.dylib", "libwebp.dylib"
-        ):
-            try:
-                lib = _ct.CDLL(_name)
-                break
-            except OSError:
-                continue
-        if lib is None:
-            raise NotImplementedError(
-                "lossy WebP (VP8) decode needs the system libwebp, "
-                "which this executor host does not ship"
-            )
-        lib.WebPDecodeRGB.restype = _ct.POINTER(_ct.c_uint8)
-        lib.WebPDecodeRGB.argtypes = [
-            _ct.c_char_p,
-            _ct.c_size_t,
-            _ct.POINTER(_ct.c_int),
-            _ct.POINTER(_ct.c_int),
-        ]
-        lib.WebPFree.argtypes = [_ct.c_void_p]
-        pat = _re.compile(id_pattern)
-        for pdf in batches:
-            ids, ws, hs, mx, mn = [], [], [], [], []
-            for path, content in zip(pdf[path_col], pdf[content_col]):
-                i = int(pat.search(str(path)).group(1))
-                wo, ho = _ct.c_int(), _ct.c_int()
-                payload = bytes(content)
-                p = lib.WebPDecodeRGB(
-                    payload, len(payload), _ct.byref(wo), _ct.byref(ho)
-                )
-                if not p:
-                    raise ValueError("libwebp rejected the WebP payload")
-                w, h = wo.value, ho.value
-                rgb = _np.ctypeslib.as_array(p, shape=(h, w, 3)).copy()
-                lib.WebPFree(p)
-                x = _np.arange(w, dtype=_np.int64)[None, :]
-                y = _np.arange(h, dtype=_np.int64)[:, None]
-                exp = (i % 100) + 2 * x + 3 * y
-                err = _np.abs(rgb.astype(_np.int64) - exp[..., None])
-                ids.append(i)
-                ws.append(w)
-                hs.append(h)
-                mx.append(int(err.max()))
-                mn.append(int(err.sum() * 1_000_000) // int(err.size))
-            yield _pd.DataFrame(
-                {
-                    "img_id": _np.asarray(ids, dtype=_np.int64),
-                    "width": _np.asarray(ws, dtype=_np.int32),
-                    "height": _np.asarray(hs, dtype=_np.int32),
-                    "max_abs_err": _np.asarray(mx, dtype=_np.int64),
-                    "mean_abs_err_u": _np.asarray(mn, dtype=_np.int64),
-                }
-            )
-
-    return df.select(path_col, content_col).mapInPandas(
-        run,
-        "img_id long, width int, height int, max_abs_err long, "
-        "mean_abs_err_u long",
+    EXECUTORS (decode_webp_system) and measure decoded pixels against
+    the analytic source — the jpeg_gradient_error_stats recipe for the
+    VP8 lane. Raises the documented gate error where the executor's
+    OS lacks the library."""
+    return payload_lane(
+        df,
+        decode_webp_system,
+        _gradient_error_row,
+        _ERROR_SCHEMA,
+        id_pattern,
+        content_col,
+        path_col,
     )
-
-
-#: One-shot latch for the by-value registration below: the
-#: registration mutates process-global cloudpickle state (how every
-#: later closure referencing this module serializes), is idempotent in
-#: effect, and is INTENTIONALLY permanent for the no-deploy executor
-#: contract — but it should still happen exactly once, not on every
-#: webp_stats call (round-15 advice).
-_PICKLE_BY_VALUE_REGISTERED = False
-
-
-def _make_webp_decoder():
-    """Decoder closure for the Arrow-batched stats lane. The VP8L
-    decoder is too large to inline by hand like the PPM/PNG closures,
-    so this module is registered for cloudpickle BY-VALUE
-    serialization (the public cloudpickle API pyspark bundles): the
-    executor receives the decode functions inside the task closure
-    and imports nothing from this repo — the same no-deploy contract
-    as the other codec lanes, without a 400-line nested function."""
-    import sys
-
-    from pyspark import cloudpickle
-
-    global _PICKLE_BY_VALUE_REGISTERED
-    if not _PICKLE_BY_VALUE_REGISTERED:
-        cloudpickle.register_pickle_by_value(sys.modules[__name__])
-        _PICKLE_BY_VALUE_REGISTERED = True
-    decode_argb = _vp8l_decode_argb
-    unwrap_vp8x = _vp8x_embedded_vp8l
-
-    def decode(payload: bytes):
-        import numpy as _np
-
-        if payload[:4] == b"RIFF" and payload[12:16] == b"VP8X":
-            inner = unwrap_vp8x(payload)
-            if inner is None:
-                raise NotImplementedError(
-                    "VP8X without an embedded VP8L still image (lossy "
-                    "frame or animation) has no native decode lane"
-                )
-            payload = inner
-        w, h, argb = decode_argb(payload)
-        out = _np.zeros((h * w, 3), dtype=_np.uint8)
-        out[:, 0] = (argb >> _np.uint32(16)) & _np.uint32(0xFF)
-        out[:, 1] = (argb >> _np.uint32(8)) & _np.uint32(0xFF)
-        out[:, 2] = argb & _np.uint32(0xFF)
-        return w, h, out.reshape(h, w, 3)
-
-    return decode
 
 
 def webp_stats(
@@ -1739,11 +1636,8 @@ def webp_stats(
     path_col: str = "path",
     id_pattern: str = r"webp_(\d+)\.webp$",
 ) -> DataFrame:
-    """Decode lossless-WebP payloads -> per-image stats (the shared
-    Arrow-batched lane with the PPM/PNG paths; only the decoder
-    differs)."""
-    from sas_etl_spark.operators.multimodal import _decoded_image_stats
-
-    return _decoded_image_stats(
-        df, _make_webp_decoder(), content_col, path_col, id_pattern
+    """Decode WebP payloads with decode_webp -> per-image stats (the
+    PPM lane with the WebP decoder)."""
+    return payload_lane(
+        df, decode_webp, _channel_means, _STATS_SCHEMA, id_pattern, content_col, path_col
     )

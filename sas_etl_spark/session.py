@@ -33,6 +33,7 @@ Conf rationale (SURVEY.md §4.2):
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
 
@@ -64,8 +65,10 @@ def _ship_package(spark: SparkSession) -> None:
     The driver process may run from any cwd with the repo reachable
     only via its own sys.path; executor workers inherit neither. A
     zip of the package added via addPyFile lands on every worker's
-    sys.path, so UDF closures that reference package modules resolve.
-    One-shot per SparkContext.
+    sys.path, so UDF closures that reference package modules resolve
+    (every multimodal.payload_lane decoder does). One-shot per
+    SparkContext; a failure warns, because those lanes then fail on
+    the executors.
     """
     sc = spark.sparkContext
     if getattr(sc, "_sas_etl_pkg_shipped", False):
@@ -84,8 +87,13 @@ def _ship_package(spark: SparkSession) -> None:
             zip_base, "zip", root_dir=os.path.dirname(pkg_dir), base_dir="sas_etl_spark"
         )
         sc.addPyFile(zip_path)
-    except Exception:  # packaging is best-effort; hot paths are UDF-free
-        pass
+    except Exception as exc:
+        warnings.warn(
+            "could not ship sas_etl_spark to executor Python workers "
+            f"({type(exc).__name__}: {exc}); lanes that import it there will fail",
+            RuntimeWarning,
+            stacklevel=2,
+        )
     sc._sas_etl_pkg_shipped = True
 
 

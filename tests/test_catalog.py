@@ -217,3 +217,19 @@ def test_check_suite_rejects_quoted_names(spark):
         check_suite(orders, checks=[("bad'name", F.col("o_custkey").isNull())])
     with _pytest.raises(ValueError, match="quotes or backticks"):
         check_suite(orders, checks=[("bad`name", F.col("o_custkey").isNull())])
+
+
+def test_ship_package_failure_warns():
+    """A failed package ship is loud: the codec lanes import their
+    decoders from the shipped zip on every executor."""
+    from sas_etl_spark.session import _ship_package
+
+    class _Context:
+        def addPyFile(self, path):
+            raise OSError("no space left")
+
+    class _Session:
+        sparkContext = _Context()
+
+    with pytest.warns(RuntimeWarning, match="OSError: no space left"):
+        _ship_package(_Session())

@@ -1,7 +1,6 @@
 """Round-15 webp hardening: VP8X-wrapped lossless routes to the
 native VP8L decoder (advice item 1), forged-header allocations are
-bounded (item 2), and the cloudpickle by-value registration fires
-once (item 3)."""
+bounded (item 2), and the distributed lane unwraps VP8X containers."""
 
 from __future__ import annotations
 
@@ -115,21 +114,6 @@ def test_legit_dims_pass_the_bound():
     assert decode_webp(webp_bytes(24, 14, 7)).shape == (14, 24, 3)
     # 1024x1024 = 1 Mpx sits exactly at the floor: never rejected
     assert 1024 * 1024 <= max(1 << 20, 60 * 4096)
-
-
-def test_pickle_by_value_registers_once(monkeypatch):
-    calls = []
-    from pyspark import cloudpickle
-
-    monkeypatch.setattr(W, "_PICKLE_BY_VALUE_REGISTERED", False)
-    monkeypatch.setattr(
-        cloudpickle,
-        "register_pickle_by_value",
-        lambda mod: calls.append(mod),
-    )
-    W._make_webp_decoder()
-    W._make_webp_decoder()
-    assert len(calls) == 1
 
 
 def test_webp_stats_decodes_vp8x_lane(spark, tmp_path):
