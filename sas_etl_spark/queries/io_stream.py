@@ -310,31 +310,35 @@ def q_partitioned_write(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_multi_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conditional multi-output split (SAS: IF cond THEN OUTPUT dsN)
-    into parquet sinks, one scan; returns per-sink row counts re-read
-    from the written files. The oracle evaluates the same predicates
-    against the source, so the hash match proves each sink received
-    exactly its predicate's rows."""
+    into parquet sinks, one scan and one write; returns per-sink row
+    counts of the read-back of all sinks. The oracle evaluates the
+    same predicates against the source, so the hash match proves each
+    sink received exactly its predicate's rows. Counts are one
+    conditional ``count`` per sink name rather than a ``groupBy``, so a
+    sink no row reached still reports ``n = 0``."""
     orders = load_table(spark, sf_dir, "orders")
-    base = scratch_dir(spark, "split")
-    multi_output_split(
-        orders,
-        {
-            "open": F.col("o_orderstatus") == "O",
-            "finished": F.col("o_orderstatus") == "F",
-            "big": F.col("o_totalprice") > 200000,  # overlaps others, like SAS OUTPUT
-        },
-        base,
+    outputs = {
+        "open": F.col("o_orderstatus") == "O",
+        "finished": F.col("o_orderstatus") == "F",
+        "big": F.col("o_totalprice") > 200000,  # overlaps others, like SAS OUTPUT
+    }
+    split = multi_output_split(orders, outputs, scratch_dir(spark, "split"))
+    counts = split.agg(
+        *[
+            F.count(F.when(F.col("sink") == name, 1)).alias(f"n{i}")
+            for i, name in enumerate(outputs)
+        ]
     )
-    frames = [
-        spark.read.parquet(f"{base}/{name}")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.lit(name).alias("sink"), "n")
-        for name in ("open", "finished", "big")
-    ]
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
+    return counts.select(
+        F.inline(
+            F.array(
+                *[
+                    F.struct(F.lit(name).alias("sink"), F.col(f"n{i}").alias("n"))
+                    for i, name in enumerate(outputs)
+                ]
+            )
+        )
+    )
 
 
 @query(

@@ -32,9 +32,13 @@ Conf rationale (SURVEY.md §4.2):
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 import warnings
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 #: Confs settable on a live session (spark.conf.set). Applied to the
@@ -68,21 +72,19 @@ def _ship_package(spark: SparkSession) -> None:
     sys.path, so UDF closures that reference package modules resolve
     (every multimodal.payload_lane decoder does). One-shot per
     SparkContext; a failure warns, because those lanes then fail on
-    the executors.
+    the executors. The zip's directory is removed at interpreter exit,
+    not before: executors fetch the file from its original path.
     """
     sc = spark.sparkContext
     if getattr(sc, "_sas_etl_pkg_shipped", False):
         return
     try:
-        import shutil
-        import tempfile
-
         import sas_etl_spark
 
         pkg_dir = os.path.dirname(os.path.abspath(sas_etl_spark.__file__))
-        zip_base = os.path.join(
-            tempfile.mkdtemp(prefix="sas_etl_pkg_"), "sas_etl_spark_pkg"
-        )
+        zip_dir = tempfile.mkdtemp(prefix="sas_etl_pkg_")
+        atexit.register(shutil.rmtree, zip_dir, ignore_errors=True)
+        zip_base = os.path.join(zip_dir, "sas_etl_spark_pkg")
         zip_path = shutil.make_archive(
             zip_base, "zip", root_dir=os.path.dirname(pkg_dir), base_dir="sas_etl_spark"
         )
@@ -100,14 +102,15 @@ def _ship_package(spark: SparkSession) -> None:
 def configure(spark: SparkSession, shuffle_partitions: int | None = None) -> SparkSession:
     """Apply runtime confs needed for oracle parity to a live session.
 
-    Idempotent and safe on a session we don't own: unknown/static confs
-    are skipped rather than raising.
+    Idempotent and safe on a session we don't own: static confs are
+    left as the session was built; any other failure raises.
     """
     for key, value in RUNTIME_CONFS.items():
         try:
             spark.conf.set(key, value)
-        except Exception:  # static conf on this build — leave as-is
-            pass
+        except AnalysisException as exc:  # a static conf stays as the session was built
+            if exc.getCondition() != "CANNOT_MODIFY_STATIC_CONFIG":
+                raise
     if shuffle_partitions is None:
         # Right-size a session still on Spark's factory default (200):
         # at fixture scale that is ~200 near-empty post-shuffle tasks
@@ -120,25 +123,15 @@ def configure(spark: SparkSession, shuffle_partitions: int | None = None) -> Spa
         # indistinguishable from the default and will be resized —
         # pass shuffle_partitions explicitly to pin it.) At cluster
         # scale the operator sizes this to bytes/128MiB (SCALE.md).
-        try:
-            submit_time = spark.sparkContext.getConf().get(
-                "spark.sql.shuffle.partitions", None
+        submit_time = spark.sparkContext.getConf().get(
+            "spark.sql.shuffle.partitions", None
+        )
+        if submit_time is None and spark.conf.get("spark.sql.shuffle.partitions") == "200":
+            spark.conf.set(
+                "spark.sql.shuffle.partitions", str(max(8, 2 * (os.cpu_count() or 4)))
             )
-            if (
-                submit_time is None
-                and spark.conf.get("spark.sql.shuffle.partitions") == "200"
-            ):
-                spark.conf.set(
-                    "spark.sql.shuffle.partitions",
-                    str(max(8, 2 * (os.cpu_count() or 4))),
-                )
-        except Exception:
-            pass
     else:
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        except Exception:
-            pass
+        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     _ship_package(spark)
     return spark
 

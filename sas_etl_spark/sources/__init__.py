@@ -11,6 +11,7 @@ from sas_etl_spark.sources.writers import (
     write_json,
     write_orc,
     write_parquet,
+    written_schema,
 )
 
 __all__ = [
@@ -25,4 +26,5 @@ __all__ = [
     "append_to",
     "multi_output_split",
     "write_bucketed",
+    "written_schema",
 ]

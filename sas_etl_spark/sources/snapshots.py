@@ -31,6 +31,8 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
+from sas_etl_spark.sources.writers import written_schema
+
 _POINTER = "_CURRENT"
 
 
@@ -62,7 +64,13 @@ def write_snapshot(
     can rewrite per-partition. Versioning is unaffected — the
     partition tree lives INSIDE the immutable ``v=<N>/`` directory,
     so time travel and the atomic pointer see one file set either
-    way."""
+    way.
+
+    An unpartitioned version's read handle is cached here, built from
+    the schema just written, so the next ``read_snapshot`` of it runs
+    no schema-inference job. A partitioned version is left to
+    ``read_snapshot``: the reader types its partition columns from the
+    directory names, which the written schema cannot predict."""
     os.makedirs(table_dir, exist_ok=True)
     version = (_versions(table_dir)[-1] + 1) if _versions(table_dir) else 1
     staging = tempfile.mkdtemp(prefix=f"_staging_v{version}_", dir=table_dir)
@@ -77,6 +85,11 @@ def write_snapshot(
     with os.fdopen(fd, "w") as f:
         f.write(str(version))
     os.replace(tmp, os.path.join(table_dir, _POINTER))  # atomic swing
+    if not partition_by:
+        spark = df.sparkSession
+        _cache_handle(
+            spark, table_dir, version, spark.read.schema(written_schema(df)).parquet(final)
+        )
     return version
 
 
@@ -87,8 +100,20 @@ def write_snapshot(
 #: version swings are always observed. Mirrors catalog._TABLE_CACHE —
 #: this caches file listing + footer schema resolution (measured
 #: ~110 ms per read_snapshot on the serve path builds, r16), never
-#: results.
+#: results. write_snapshot seeds it for unpartitioned versions.
 _SNAPSHOT_CACHE: dict[tuple[str, str, int], DataFrame] = {}
+
+
+def _cache_key(spark: SparkSession, table_dir: str, version: int) -> tuple[str, str, int]:
+    return (spark.sparkContext.applicationId, os.path.abspath(table_dir), version)
+
+
+def _cache_handle(spark: SparkSession, table_dir: str, version: int, df: DataFrame) -> None:
+    from sas_etl_spark.catalog import evict_dead_app_entries
+
+    key = _cache_key(spark, table_dir, version)
+    evict_dead_app_entries(_SNAPSHOT_CACHE, key[0])
+    _SNAPSHOT_CACHE[key] = df
 
 
 def read_snapshot(
@@ -97,15 +122,11 @@ def read_snapshot(
     """Read the current snapshot, or time-travel to ``version``."""
     if version is None:
         version = current_version(table_dir)
-    key = (spark.sparkContext.applicationId, os.path.abspath(table_dir), version)
-    cached = _SNAPSHOT_CACHE.get(key)
+    cached = _SNAPSHOT_CACHE.get(_cache_key(spark, table_dir, version))
     if cached is not None:
         return cached
     df = spark.read.parquet(os.path.join(table_dir, f"v={version}"))
-    from sas_etl_spark.catalog import evict_dead_app_entries
-
-    evict_dead_app_entries(_SNAPSHOT_CACHE, key[0])
-    _SNAPSHOT_CACHE[key] = df
+    _cache_handle(spark, table_dir, version, df)
     return df
 
 

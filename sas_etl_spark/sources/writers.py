@@ -3,9 +3,11 @@ conditional OUTPUT to multiple datasets). SURVEY.md §2.1 #6-7, §2.2 #11.
 
 Scale conventions:
 - parquet + optional partitionBy for downstream partition pruning;
-- multi-output split caches the source ONCE then writes N filtered
-  views — the SAS DATA step reads its input once for N OUTPUTs, and so
-  do we (without the cache, N writes = N full scans).
+- multi-output split tags each row with the sinks whose predicate
+  holds and writes ONE partitioned dataset — the SAS DATA step reads
+  its input once for N OUTPUTs, and so do we (one scan, one job);
+- read-backs carry the schema the write produced (``written_schema``),
+  so no Spark job re-infers what the writer already knew.
 """
 
 from __future__ import annotations
@@ -13,6 +15,15 @@ from __future__ import annotations
 from collections.abc import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    MapType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 
 def write_parquet(
@@ -75,26 +86,57 @@ def write_bucketed(
     writer.saveAsTable(table)
 
 
+def _nullable(dt: DataType) -> DataType:
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def written_schema(df: DataFrame) -> StructType:
+    """The schema Spark's parquet reader infers for the files ``df``
+    writes: ``df.schema`` with every nullability flag set, recursively
+    through array elements, map values and struct fields (the reader
+    declares everything nullable). Passing it to ``spark.read.schema``
+    skips the footer-inference job a plain read-back launches."""
+    return _nullable(df.schema)
+
+
+#: Partition column that multi_output_split writes each sink under.
+SINK_COL = "sink"
+
+
 def multi_output_split(
     df: DataFrame, outputs: Mapping[str, Column], base_path: str
-) -> dict[str, int]:
+) -> DataFrame:
     """Conditional multi-output (SAS: IF cond THEN OUTPUT ds;).
 
-    Writes one parquet dataset per named predicate under base_path,
-    scanning the source once (cache + N filters). Rows matching
-    several predicates go to several outputs, matching SAS OUTPUT
-    semantics. Returns rows written per output.
+    Tags every row with the names of the outputs whose predicate holds
+    and writes once, partitioned by ``sink``: each output is its own
+    parquet dataset under ``<base_path>/sink=<name>/``. One scan, one
+    write job. A row matching several predicates goes to several
+    outputs and a row matching none is written nowhere, as with SAS
+    OUTPUT. Returns the read-back of all outputs (``df``'s columns plus
+    ``sink``), with the written schema supplied rather than inferred;
+    an output no row matched has no directory and reads back empty.
     """
-    df = df.cache()
-    try:
-        counts: dict[str, int] = {}
-        for name, pred in outputs.items():
-            subset = df.filter(pred)
-            write_parquet(subset, f"{base_path}/{name}")
-            counts[name] = subset.count()
-        return counts
-    finally:
-        df.unpersist()
+    if SINK_COL.lower() in (c.lower() for c in df.columns):
+        raise ValueError(f"input already has a column named {SINK_COL!r}")
+    sinks = F.array_compact(
+        F.array(*[F.when(pred, F.lit(name)) for name, pred in outputs.items()])
+    )
+    write_parquet(
+        df.withColumn(SINK_COL, F.explode(sinks)), base_path, partition_by=[SINK_COL]
+    )
+    schema = StructType(
+        written_schema(df).fields + [StructField(SINK_COL, StringType(), True)]
+    )
+    return df.sparkSession.read.schema(schema).parquet(base_path)
 
 
 def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:

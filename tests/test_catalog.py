@@ -233,3 +233,70 @@ def test_ship_package_failure_warns():
 
     with pytest.warns(RuntimeWarning, match="OSError: no space left"):
         _ship_package(_Session())
+
+
+def test_ship_package_zip_dir_removed_at_exit(monkeypatch):
+    """The package zip's temp directory is registered for removal at
+    interpreter exit (executors keep fetching it until then)."""
+    import atexit
+    import os
+
+    from sas_etl_spark.session import _ship_package
+
+    class _Context:
+        shipped = []
+
+        def addPyFile(self, path):
+            self.shipped.append(path)
+
+    class _Session:
+        sparkContext = _Context()
+
+    registered = []
+    monkeypatch.setattr(
+        atexit, "register", lambda fn, *a, **kw: registered.append((fn, a, kw))
+    )
+    _ship_package(_Session())
+    (zip_path,) = _Context.shipped
+    zip_dir = os.path.dirname(zip_path)
+    assert os.path.isfile(zip_path)
+    ((fn, args, kwargs),) = registered
+    fn(*args, **kwargs)
+    assert not os.path.exists(zip_dir)
+
+
+def test_configure_propagates_unexpected_conf_errors():
+    """configure() leaves a static conf as the session built it, and
+    raises on any other failure to set a conf."""
+    from sas_etl_spark.session import RUNTIME_CONFS, configure
+
+    class _Conf:
+        def __init__(self, fail):
+            self.fail, self.values = fail, {}
+
+        def set(self, key, value):
+            if key in self.fail:
+                raise self.fail[key]
+            self.values[key] = value
+
+    class _Session:
+        def __init__(self, fail):
+            self.conf = _Conf(fail)
+            self.sparkContext = type("_Context", (), {"_sas_etl_pkg_shipped": True})()
+
+    static = AnalysisException(
+        message="static", errorClass="CANNOT_MODIFY_STATIC_CONFIG", messageParameters={}
+    )
+    first, last = list(RUNTIME_CONFS)[0], list(RUNTIME_CONFS)[-1]
+    session = _Session({last: static})
+    assert configure(session, shuffle_partitions=4) is session
+    assert last not in session.conf.values
+    assert session.conf.values["spark.sql.shuffle.partitions"] == "4"
+
+    with pytest.raises(RuntimeError, match="conf service down"):
+        configure(_Session({first: RuntimeError("conf service down")}), 4)
+    other = AnalysisException(
+        message="other", errorClass="CONFIG_NOT_AVAILABLE", messageParameters={}
+    )
+    with pytest.raises(AnalysisException):
+        configure(_Session({first: other}), 4)

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from sas_etl_spark.catalog import load_table
@@ -40,18 +41,35 @@ def test_csv_roundtrip_preserves_rows(spark):
 def test_multi_output_split_counts_and_overlap(spark):
     orders = load_table(spark, SF_SMOKE, "orders")
     base = tempfile.mkdtemp(prefix="split_")
-    counts = multi_output_split(
+    split = multi_output_split(
         orders,
         {
             "open": F.col("o_orderstatus") == "O",
             "rest": F.col("o_orderstatus") != "O",
             "all": F.lit(True),  # overlapping output, like SAS OUTPUT a; OUTPUT b;
+            "none": F.lit(False),  # an output no row reaches
         },
         base,
     )
-    assert counts["open"] + counts["rest"] == orders.count()
-    assert counts["all"] == orders.count()
-    assert spark.read.parquet(f"{base}/open").count() == counts["open"]
+    counts = {r.sink: r.n for r in split.groupBy("sink").agg(F.count("*").alias("n")).collect()}
+    counts = {name: counts.get(name, 0) for name in ("open", "rest", "all", "none")}
+    assert counts["open"] + counts["rest"] == counts["all"] == orders.count()
+    assert counts["none"] == 0
+    assert spark.read.parquet(f"{base}/sink=open").count() == counts["open"]
+    assert split.columns == orders.columns + ["sink"]
+
+    # A row matching no predicate is written to no output.
+    base2 = tempfile.mkdtemp(prefix="split_")
+    only_open = multi_output_split(
+        orders, {"open": F.col("o_orderstatus") == "O"}, base2
+    )
+    missed = orders.filter(F.col("o_orderstatus") != "O").select("o_orderkey")
+    assert missed.count() > 0
+    assert only_open.join(missed, "o_orderkey").count() == 0
+    assert only_open.count() == counts["open"]
+
+    with pytest.raises(ValueError, match="sink"):
+        multi_output_split(orders.withColumn("SINK", F.lit(1)), {"a": F.lit(True)}, base2)
 
 
 def test_stream_tumbling_equals_batch(spark):

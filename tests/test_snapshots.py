@@ -76,3 +76,54 @@ def test_crash_between_publish_and_pointer_is_invisible(spark, tmp_path):
     v = write_snapshot(spark.range(7), table)
     assert v == 3  # never clobbers the orphaned v=2
     assert read_snapshot(spark, table).count() == 7
+
+
+def test_written_schema_matches_inferred_read_and_seeds_snapshot_cache(spark, tmp_path):
+    """written_schema(df) is exactly the schema Spark's parquet reader
+    infers for df's files, nested nullability included; the handle
+    write_snapshot caches from it reads the same schema and rows as
+    an inference read of that version."""
+    from pyspark.sql import functions as F
+
+    from sas_etl_spark.sources import written_schema
+    from sas_etl_spark.sources.snapshots import _SNAPSHOT_CACHE, _cache_key
+
+    df = spark.range(4).select(
+        F.col("id").alias("big"),
+        F.col("id").cast("int").alias("i"),
+        F.concat(F.lit("s"), F.col("id").cast("string")).alias("s"),
+        (F.col("id") / 3).cast("decimal(10,2)").alias("dec"),
+        F.date_add(F.lit("2024-01-01").cast("date"), F.col("id").cast("int")).alias("d"),
+        F.timestamp_seconds(F.col("id") * 3600).alias("ts"),
+        F.lit("2024-01-01 00:00:00").cast("timestamp_ntz").alias("ts_ntz"),
+        F.array(F.col("id").cast("double"), F.lit(0.5)).alias("arr"),
+        F.create_map(F.lit("k"), F.col("id").cast("int")).alias("m"),
+        F.struct(
+            F.col("id").alias("a"), F.array(F.col("id")).alias("inner")
+        ).alias("st"),
+    )
+    assert any(not f.nullable for f in df.schema.fields)  # flags differ before the write
+    path = str(tmp_path / "plain")
+    df.write.parquet(path)
+    assert written_schema(df) == spark.read.parquet(path).schema
+
+    table = str(tmp_path / "seeded")
+    version = write_snapshot(df, table)
+    seeded = read_snapshot(spark, table)
+    assert _SNAPSHOT_CACHE.pop(_cache_key(spark, table, version)) is seeded
+    inferred = read_snapshot(spark, table)
+    assert inferred is not seeded
+    assert seeded.schema == inferred.schema
+    assert sorted(seeded.collect()) == sorted(inferred.collect())
+
+
+def test_partitioned_snapshot_keeps_inference(spark, tmp_path):
+    """Partition columns are typed from directory names, so a
+    partitioned version is not seeded into the handle cache."""
+    from sas_etl_spark.sources.snapshots import _SNAPSHOT_CACHE, _cache_key
+
+    table = str(tmp_path / "parted")
+    df = spark.range(6).selectExpr("id", "cast(id % 2 as string) as part")
+    version = write_snapshot(df, table, partition_by=("part",))
+    assert _cache_key(spark, table, version) not in _SNAPSHOT_CACHE
+    assert dict(read_snapshot(spark, table).dtypes)["part"] == "int"
