@@ -29,32 +29,9 @@ SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query (revenue by nation: 3-way join + agg) on sf0.001."""
-    _rearm_dataframe_debugging_cache(spark)
     from sas_etl_spark.queries.joins import q_join3_revenue
 
     return q_join3_revenue(spark, SMOKE_SF_DIR)
-
-
-def _rearm_dataframe_debugging_cache(spark: SparkSession) -> None:
-    """ADVICE r16 (session.py:57): pyspark freezes
-    ``spark.python.sql.dataFrameDebugging.enabled`` into a module
-    global on the FIRST DataFrame API call, so on the
-    driver-handed-session path a DataFrame touched before ``entry()``
-    silently pins the debug capture ON and session.configure()'s
-    conf.set loses the measured 30-43% plan-build win with no signal.
-    Setting the conf before any of this repo's DataFrame calls and
-    then clearing the stuck cached value (here, the driver's first
-    call into the repo) makes the next is_debugging_enabled() observe
-    the production posture. Best-effort: a pyspark without the
-    private cache just keeps its behavior."""
-    try:
-        spark.conf.set("spark.python.sql.dataFrameDebugging.enabled", "false")
-        from pyspark.errors import utils as _err_utils
-
-        if getattr(_err_utils, "_enable_debugging_cache", None) is True:
-            _err_utils._enable_debugging_cache = None
-    except Exception:
-        pass
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

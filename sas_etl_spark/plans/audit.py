@@ -40,14 +40,15 @@ def formatted_plan(df: DataFrame) -> str:
 
 def normalized_plan(df: DataFrame) -> str:
     """formatted_plan without what varies between runs of one plan:
-    expression ids, plan ids, lambda-variable suffixes (a JVM-wide
-    counter), scanned file lists and paths, and the partition counts
-    of exchanges (they follow core count and
+    expression ids, plan ids, lambda-variable and ``_common_expr_``
+    suffixes (JVM-wide counters), scanned file lists and paths, and
+    the partition counts of exchanges (they follow core count and
     ``spark.sql.shuffle.partitions``, not the query)."""
     plan = formatted_plan(df)
     plan = re.sub(r"#\d+L?", "", plan)
     plan = re.sub(r"plan_id=\d+", "plan_id=", plan)
     plan = re.sub(r"(lambda \w+?)_\d+\b", r"\1", plan)
+    plan = re.sub(r"_common_expr_\d+", "_common_expr_", plan)
     plan = re.sub(r"(Location: \w+) \[.*\]", r"\1", plan)
     plan = re.sub(r"(?:file:|/tmp/)[^\s,\]\)]*", "<path>", plan)
     # an exchange's partitioning ends in its count, then the shuffle

@@ -44,6 +44,7 @@ from sas_etl_spark.sources import (
     write_json,
     write_orc,
     write_parquet,
+    written_schema,
 )
 from sas_etl_spark.streaming import (
     dedup_within_watermark,
@@ -287,7 +288,8 @@ def q_partitioned_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     path = scratch_dir(spark, "part")
     write_parquet(orders, path, partition_by=["o_orderstatus"])
-    back = spark.read.parquet(path).filter(F.col("o_orderstatus") == "O")
+    schema = written_schema(orders.drop("o_orderstatus")).add("o_orderstatus", "string")
+    back = spark.read.schema(schema).parquet(path).filter(F.col("o_orderstatus") == "O")
     return back.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n"),
         F.round(F.sum("o_totalprice"), 2).alias("total"),

@@ -28,6 +28,24 @@ Conf rationale (SURVEY.md §4.2):
   drowning in fixed shuffle-partition overhead.
 - Arrow on: every Python<->JVM data path (toPandas, pandas UDFs) is
   batched through Arrow, never per-row pickling.
+- ``codegen.cache.maxEntries=1000``: Spark keeps the Janino classes it
+  compiles for whole-stage and projection code in a Guava cache of 100
+  entries by default. Guava splits it into segments that each evict on
+  their own share, so it drops classes before it holds 100. The 12
+  etl-sf0.1 benchmark queries need 100 distinct classes (47 for the
+  write-sf0.1 queries), so at the default every repeat etl pass
+  recompiled 28-77 of them, and HotSpot JIT-compiled each new class
+  again. At 1000 a repeat pass compiles none; ``codegen_compiles``
+  counts them. The conf is static: only ``get_spark`` can set it. A
+  session built elsewhere and handed to ``configure`` keeps Spark's
+  100 entries.
+- ``python.sql.dataFrameDebugging.enabled=false``: per-DataFrame-call
+  site capture (error-context debugging) costs one extra Py4J call and
+  a Python stack walk per API call, measured at 30-43% of plan-build
+  latency on the heaviest builders (q_rrf_hybrid 809 -> 465 ms); error
+  messages lose only the "called from <user line>" hint. The conf is
+  static, so only ``get_spark`` sets it; a session built elsewhere
+  keeps its own setting.
 """
 
 from __future__ import annotations
@@ -51,15 +69,6 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # r16: per-DataFrame-API-call site capture (error-context
-    # debugging) costs one extra Py4J RPC + a Python stack walk per
-    # call — measured 30-43% of plan-BUILD latency on the heaviest
-    # builders (q_rrf_hybrid 809->465 ms). Production posture is off;
-    # error messages lose only the "called from <user line>" hint.
-    # NOTE: pyspark caches this flag process-wide on first use, so it
-    # must be set before the first DataFrame API call (configure()
-    # runs inside load_table, ahead of any column expression).
-    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 
@@ -136,6 +145,13 @@ def configure(spark: SparkSession, shuffle_partitions: int | None = None) -> Spa
     return spark
 
 
+def codegen_compiles(spark: SparkSession) -> int:
+    """Janino compilations this JVM has made so far (Spark's codegen
+    compilation-time histogram count); a cache hit compiles nothing."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+
 def get_spark(
     app_name: str = "sas_etl_spark",
     cpus: int | None = None,
@@ -162,6 +178,11 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
+        # Static confs (module docstring). The generated-code cache
+        # holds the benchmark queries' classes (etl 100, write 47) with
+        # room to spare, so a repeat pass compiles none.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
     for key, value in RUNTIME_CONFS.items():

@@ -124,6 +124,21 @@ def test_normalized_plan_is_stable_and_sees_plan_changes(spark):
     assert normalized_plan(filtered) != first
 
 
+def test_normalized_plan_strips_common_expr_counter(spark):
+    """``count_if`` plans name their shared subexpressions
+    ``_common_expr_<N>`` from a JVM-wide counter, so two builds of one
+    aggregate print different names; normalized, they are equal."""
+
+    def build():
+        df = spark.range(10).withColumn("odd", F.col("id") % 2 == 1)
+        return df.agg(F.count_if("odd").alias("n_odd"), F.count_if(~F.col("odd")))
+
+    first, second = build(), build()
+    assert "_common_expr_" in formatted_plan(first)
+    assert formatted_plan(first) != formatted_plan(second)
+    assert normalized_plan(first) == normalized_plan(second)
+
+
 def test_minhash_pipeline_avoids_cartesian(spark):
     assert_no_cartesian(
         QUERIES["q_near_dup_minhash"].fn(spark, SF_CORRECTNESS), "q_near_dup_minhash"
