@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sas_etl_spark.session import configure
+from sas_etl_spark.session import app_cache, configure
 
 #: All fixture tables, per TESTDATA.md / FIXTURES.md.
 TABLES: tuple[str, ...] = (
@@ -32,33 +32,6 @@ TABLES: tuple[str, ...] = (
     "documents",
     "embeddings",
 )
-
-
-#: Table-handle cache: avoids re-running file listing + footer schema
-#: resolution (and the Py4J conf round-trips in configure) on every
-#: query build. DataFrames are immutable plan handles — safe to share.
-#: Keyed per SparkContext so a fresh session never sees stale handles.
-_TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
-def evict_dead_app_entries(cache: dict, live_app_id: str) -> None:
-    """Drop cache entries that belong to a stopped SparkContext.
-
-    PySpark permits ONE active SparkContext per process, so any entry
-    keyed by an applicationId other than the live one references a
-    context that no longer exists — its plan handles are dead weight a
-    long-lived multi-session host (notebook kernel, app server cycling
-    sessions) would otherwise accumulate forever. Keys may be the
-    app-id string itself or a tuple whose first element is the app-id.
-    O(cache) per call, but only invoked on insert-after-miss — at most
-    once per (new session, key).
-    """
-    for key in [
-        k
-        for k in cache
-        if (k[0] if isinstance(k, tuple) else k) != live_app_id
-    ]:
-        del cache[key]
 
 
 #: Canonical dtype of events.ts after normalization.
@@ -113,17 +86,21 @@ def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one fixture table, normalizing types (events ts encodings)."""
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    cached = _TABLE_CACHE.get(key)
+    """Load one fixture table, normalizing types (events ts encodings).
+
+    The handle is kept in ``app_cache``: a repeat load skips the file
+    listing, footer schema resolution and the Py4J conf round-trips in
+    configure. DataFrames are immutable plan handles, safe to share."""
+    cache = app_cache(spark)
+    key = ("table", sf_dir, name)
+    cached = cache.get(key)
     if cached is not None:
         return cached
     configure(spark)
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name == "events":
         df = normalize_event_ts(df)
-    evict_dead_app_entries(_TABLE_CACHE, key[0])
-    _TABLE_CACHE[key] = df
+    cache[key] = df
     return df
 
 

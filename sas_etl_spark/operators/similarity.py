@@ -57,6 +57,29 @@ def _estimated_scan_tasks(df: DataFrame) -> int | None:
     return max(1, -(-total // max(1, max_pb)))
 
 
+def spread_small_scan(df: DataFrame) -> DataFrame:
+    """Spread a scan that would run in fewer tasks than the
+    application's default parallelism over that many tasks.
+
+    A small input packed into one parquet file scans as one task (the
+    sf0.1 embeddings are ONE 0.8 MB file), so row-local work above it,
+    such as an interpreted-HOF cosine, runs on a single core. Below
+    the gate a round-robin repartition spreads the rows first. The
+    gate is the ESTIMATED scan partition count (_estimated_scan_tasks:
+    the public inputFiles() listing, no plan->RDD conversion), so at
+    real scale, where the scan is already wide or the files sit on an
+    object store and the estimate abstains, ``df`` comes back as is
+    and no corpus-wide shuffle is added. Measured on q_knn_cosine at
+    sf0.1 (2k rows, 64-dim, bench protocol): 115 ms single-task ->
+    ~55-60 ms spread over 32 tasks.
+    """
+    min_tasks = df.sparkSession.sparkContext.defaultParallelism
+    est = _estimated_scan_tasks(df)
+    if est is not None and est < min_tasks:
+        return df.repartition(min_tasks)
+    return df
+
+
 def dot(a: ColumnOrName, b: ColumnOrName) -> Column:
     """Dot product of two array columns, computed in double."""
     return F.aggregate(
@@ -239,9 +262,7 @@ def cosine_topk_literal(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     sim_col: str = "sim",
-    unroll: bool = False,
     round_dp: int | None = None,
-    min_tasks: int | None = None,
 ) -> DataFrame:
     """Exact top-k cosine against a *bound* query vector.
 
@@ -256,50 +277,15 @@ def cosine_topk_literal(
     it per row is dead work); Python's left-assoc sum matches the
     Spark fold order, so qnorm is bit-identical to the HOF fold.
 
-    ``unroll`` trades plan size for per-row speed. False (default):
-    HOF dot/norm — a tiny expression tree that plans in ~1 ms but is
-    interpreted per row (~10 us/row at dim 64). True: element_at
-    chains — per-row cost drops ~100x inside whole-stage codegen, but
-    the ~3*dim-term tree costs ~1 s to build+plan+compile. Measured
-    crossover on the 64-dim fixtures is ~10^5 candidate rows; below
-    it (interactive point lookups) keep the default, above it (the
-    batch-scoring scale path) pass unroll=True — at 100 TB the plan
-    is built once and the per-row term is everything.
-
     ``round_dp``: round sim before the cut (cross-engine boundary
-    rule, see cosine_topk).
-
-    ``min_tasks`` floors the scoring parallelism: when the candidate
-    scan yields fewer partitions (a small corpus segment packed into
-    one parquet row group — the sf0.1 fixture is ONE 0.8 MB file, so
-    the whole interpreted-HOF scoring ran on a single core), a
-    round-robin repartition spreads rows across min_tasks tasks first.
-    Gated on the ESTIMATED scan partition count (file bytes /
-    maxPartitionBytes via the public inputFiles() listing — see
-    _estimated_scan_tasks; no plan->RDD conversion), so at 100 TB —
-    where the scan is already thousands of tasks, or the files are on
-    an object store and the estimate abstains — the gate is false and
-    no corpus-wide shuffle is ever introduced; the shuffle only
-    happens exactly when it is provably tiny. Measured at sf0.1 (2k
-    rows, 64-dim, bench protocol): 115 ms single-task -> ~55-60 ms
-    with min_tasks=32.
+    rule, see cosine_topk). A candidate set that scans as one task can
+    be passed through spread_small_scan first (q_knn_cosine does).
     """
     import math
 
-    dim = len(query_vec)
     qv = [float(x) for x in query_vec]
     qnorm = math.sqrt(sum(x * x for x in qv))
-    if min_tasks is not None:
-        est = _estimated_scan_tasks(candidates)
-        if est is not None and est < min_tasks:
-            candidates = candidates.repartition(min_tasks)
-    if unroll:
-        acc: Column = F.lit(0.0)
-        for i, x in enumerate(qv, start=1):
-            acc = acc + F.element_at(vec_col, i).cast("double") * F.lit(x)
-        sim = acc / (l2_norm_unrolled(vec_col, dim) * F.lit(qnorm))
-    else:
-        sim = dot(vec_col, F.lit(qv)) / (l2_norm(vec_col) * F.lit(qnorm))
+    sim = dot(vec_col, F.lit(qv)) / (l2_norm(vec_col) * F.lit(qnorm))
     if round_dp is not None:
         sim = F.round(sim, round_dp)
     return (

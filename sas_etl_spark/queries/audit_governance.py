@@ -661,29 +661,18 @@ def q_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return near_dup_pairs_between(batch, master, threshold=0.8)
 
 
-#: (applicationId, sf_dir) -> table_dir of the persisted near-dup
-#: band-signature index (built once per session per corpus).
-_NEARDUP_INDEX_DIRS: dict[tuple[str, str], str] = {}
-
-
 def _ensure_neardup_index(spark: SparkSession, sf_dir: str, master: DataFrame) -> str:
-    """Build-if-absent: the session's persisted band-signature index
-    over the fixture master — shared by the batch serve
-    (q_neardup_index_serve) and the streaming ingest twin
-    (q_stream_neardup in io_stream.py), which is the point: one
+    """Build-if-absent: the application's persisted band-signature
+    index over the fixture master (scratch.artifact_dir) — shared by
+    the batch serve (q_neardup_index_serve) and the streaming ingest
+    twin (q_stream_neardup in io_stream.py), which is the point: one
     artifact, many consumers."""
-    import os
-
     from sas_etl_spark.operators.minhash import build_neardup_index
-    from sas_etl_spark.scratch import scratch_dir
+    from sas_etl_spark.scratch import artifact_dir
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    table_dir = _NEARDUP_INDEX_DIRS.get(key)
-    if table_dir is None or not os.path.isdir(os.path.join(table_dir, "bands")):
-        table_dir = scratch_dir(spark, "neardup_index")
-        build_neardup_index(master, table_dir)
-        _NEARDUP_INDEX_DIRS[key] = table_dir
-    return table_dir
+    return artifact_dir(
+        spark, "neardup_index", sf_dir, "bands", lambda d: build_neardup_index(master, d)
+    )
 
 
 @query(
@@ -723,11 +712,6 @@ def q_neardup_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("batch_id", "master_id", "jaccard")
 
 
-#: (applicationId, sf_dir) -> table_dir of the MOR-maintained near-dup
-#: index fixture (base build + one uncompacted merge-on-read append).
-_NEARDUP_MOR_DIRS: dict[tuple[str, str], str] = {}
-
-
 @query(
     "q_neardup_mor_serve",
     oracle=_INC_NEARDUP_ORACLE,
@@ -755,26 +739,22 @@ def q_neardup_mor_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge, or a mis-keyed anti-join flips it. neardup_compact's
     fold-and-empty is pinned value-identical to this uncompacted view
     (and to the COW twin) by tests/test_round13_semantics.py."""
-    import os
-
     from sas_etl_spark.operators.minhash import (
         _read_bands_delta_if_any,
         append_neardup_index,
         build_neardup_index,
         neardup_query_index,
     )
-    from sas_etl_spark.scratch import scratch_dir
+    from sas_etl_spark.scratch import artifact_dir
 
     batch, master = _neardup_fixture(spark, sf_dir)
-    base_half = master.filter(F.col("doc_id") % 2 == 0)
-    ingest_half = master.filter(F.col("doc_id") % 2 != 0)
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    table_dir = _NEARDUP_MOR_DIRS.get(key)
-    if table_dir is None or not os.path.isdir(os.path.join(table_dir, "bands")):
-        table_dir = scratch_dir(spark, "neardup_mor")
-        build_neardup_index(base_half, table_dir)
-        append_neardup_index(ingest_half, table_dir, mode="mor")
-        _NEARDUP_MOR_DIRS[key] = table_dir
+
+    def build(table_dir: str) -> None:
+        # base build + one uncompacted merge-on-read append
+        build_neardup_index(master.filter(F.col("doc_id") % 2 == 0), table_dir)
+        append_neardup_index(master.filter(F.col("doc_id") % 2 != 0), table_dir, mode="mor")
+
+    table_dir = artifact_dir(spark, "neardup_mor", sf_dir, "bands", build)
     delta = _read_bands_delta_if_any(spark, table_dir)
     if delta is None or delta.limit(1).count() == 0:
         raise RuntimeError(

@@ -112,20 +112,18 @@ def _bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Small-fixture parallelism: a single-file corpus scans as ONE task
     (the sf0.1 fixture is one parquet file), serializing the fold; the
-    provably-tiny gated repartition (_estimated_scan_tasks — same
-    idiom as cosine_topk_literal's min_tasks) spreads it, and never
-    fires at real scale where the scan is already parallel."""
-    from sas_etl_spark.operators.similarity import _estimated_scan_tasks
+    provably-tiny gated repartition (spread_small_scan) spreads it,
+    and never fires at real scale where the scan is already
+    parallel."""
+    from sas_etl_spark.operators.similarity import spread_small_scan
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    min_tasks = spark.sparkContext.defaultParallelism
-    est = _estimated_scan_tasks(docs)
-    if est is not None and est < min_tasks:
-        docs = docs.repartition(min_tasks)
+    docs = spread_small_scan(
+        load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    )
     toks = docs.select("doc_id", F.split("text", " ").alias("_toks"))
     nt = len(BM25_TERMS)
     # avgdl from the EXACT long token-count sum, one double division
-    # (ADVICE r11): F.avg over ints folds in DOUBLE, so the min_tasks
+    # (ADVICE r11): F.avg over ints folds in DOUBLE, so the spread
     # repartition above could flip a rounding-boundary mean run-to-run;
     # the integer sum is partitioning-independent by construction.
     stats = toks.agg(

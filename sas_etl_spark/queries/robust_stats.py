@@ -989,8 +989,8 @@ def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     a pure function of the row), replicate sums accumulate
     exact-integer (decimal(38,0) on the Spark side, hugeint in
     DuckDB), and each mean is ONE double division of identical
-    integers. The min_tasks repartition below reorders rows feeding
-    the aggregation; with float folds a mean sitting on a 6dp
+    integers. The spread_small_scan repartition below reorders rows
+    feeding the aggregation; with float folds a mean sitting on a 6dp
     rounding boundary could flip run-to-run — with integer folds the
     result is partitioning-independent by construction. The 1e-6
     input quantization is part of the operator's definition (both
@@ -1006,16 +1006,13 @@ def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     readout for pipeline metrics."""
     ev = load_table(spark, sf_dir, "events")
     from sas_etl_spark.operators.sampling import hash_bucket
-    from sas_etl_spark.operators.similarity import _estimated_scan_tasks
+    from sas_etl_spark.operators.similarity import spread_small_scan
 
     # the per-(row, replicate) sha draw is the dominant cost and is
     # embarrassingly parallel — floor the scan parallelism when a
-    # small fixture packs into a handful of files (min_tasks idiom;
-    # the gate is false at real scale where scans are already wide)
-    min_tasks = spark.sparkContext.defaultParallelism
-    est = _estimated_scan_tasks(ev)
-    if est is not None and est < min_tasks:
-        ev = ev.repartition(min_tasks)
+    # small fixture packs into a handful of files (the gate is false
+    # at real scale where scans are already wide)
+    ev = spread_small_scan(ev)
     rep = ev.select(
         "event_type",
         F.round(F.col("value") * 1_000_000, 0).cast("long").alias("v6"),

@@ -539,17 +539,12 @@ def q_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (AQE broadcasts the aggregated lists when they fit) — the
     rewritten corpus itself is never shuffled. A single-file small
     fixture scans as one task, so the provably-tiny gated repartition
-    (cosine_topk_literal's min_tasks idiom) parallelizes the
-    row-local spanning there; at real scale the gate is false and
-    adds nothing.
+    (spread_small_scan) parallelizes the row-local spanning there; at
+    real scale the gate is false and adds nothing.
     """
-    from sas_etl_spark.operators.similarity import _estimated_scan_tasks
+    from sas_etl_spark.operators.similarity import spread_small_scan
 
-    docs = load_table(spark, sf_dir, "documents")
-    min_tasks = spark.sparkContext.defaultParallelism
-    est = _estimated_scan_tasks(docs)
-    if est is not None and est < min_tasks:
-        docs = docs.repartition(min_tasks)
+    docs = spread_small_scan(load_table(spark, sf_dir, "documents"))
     toks = docs.select("doc_id", F.split("text", " ").alias("toks"))
     last_cid = F.floor((F.size("toks") - 1) / SPAN_TOKENS).cast("int")
     span_at = lambda c: F.array_join(  # noqa: E731 — row-local slice

@@ -8,6 +8,19 @@ Two use-cases:
 2. Our own tests/bench build a session from scratch — ``get_spark()``
    applies the full tuned config (memory, UI, AQE) for local[N] mode.
 
+Cache policy: per-application state lives in one place,
+``app_cache(spark)``, a plain dict stored on the live SparkContext.
+Each kind of entry has its own tuple key with the kind name first
+(``("table", sf_dir, name)``, ``("snapshot", table_dir, version)``,
+``("ivf_index", sf_dir)``, ...). It holds only plan handles and
+build-once input artifacts (directories the queries read from), never
+a value read from a query's inputs: a build that reads its inputs
+runs that read every time, so a measurement of it includes the job.
+A new SparkContext starts with an empty dict and a stopped one takes
+its dict with it, so no entry is keyed by application id and nothing
+needs evicting. Module-level dicts and sets are not used as memos
+(``tests/test_cache_policy.py``).
+
 Conf rationale (SURVEY.md §4.2):
 - ``session.timeZone=UTC``: fixture timestamps are naive/UTC; DuckDB
   oracle is UTC-naive — pinning avoids value shifts in comparisons.
@@ -72,6 +85,15 @@ RUNTIME_CONFS: dict[str, str] = {
 }
 
 
+def app_cache(spark: SparkSession) -> dict:
+    """The per-SparkContext cache (see the module docstring)."""
+    sc = spark.sparkContext
+    cache = getattr(sc, "_sas_etl_cache", None)
+    if cache is None:
+        cache = sc._sas_etl_cache = {}
+    return cache
+
+
 def _ship_package(spark: SparkSession) -> None:
     """Make sas_etl_spark importable on executor Python workers.
 
@@ -84,8 +106,8 @@ def _ship_package(spark: SparkSession) -> None:
     the executors. The zip's directory is removed at interpreter exit,
     not before: executors fetch the file from its original path.
     """
-    sc = spark.sparkContext
-    if getattr(sc, "_sas_etl_pkg_shipped", False):
+    cache = app_cache(spark)
+    if ("package",) in cache:
         return
     try:
         import sas_etl_spark
@@ -97,7 +119,7 @@ def _ship_package(spark: SparkSession) -> None:
         zip_path = shutil.make_archive(
             zip_base, "zip", root_dir=os.path.dirname(pkg_dir), base_dir="sas_etl_spark"
         )
-        sc.addPyFile(zip_path)
+        spark.sparkContext.addPyFile(zip_path)
     except Exception as exc:
         warnings.warn(
             "could not ship sas_etl_spark to executor Python workers "
@@ -105,7 +127,7 @@ def _ship_package(spark: SparkSession) -> None:
             RuntimeWarning,
             stacklevel=2,
         )
-    sc._sas_etl_pkg_shipped = True
+    cache[("package",)] = True
 
 
 def configure(spark: SparkSession, shuffle_partitions: int | None = None) -> SparkSession:

@@ -31,6 +31,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
+from sas_etl_spark.session import app_cache
 from sas_etl_spark.sources.writers import written_schema
 
 _POINTER = "_CURRENT"
@@ -87,46 +88,35 @@ def write_snapshot(
     os.replace(tmp, os.path.join(table_dir, _POINTER))  # atomic swing
     if not partition_by:
         spark = df.sparkSession
-        _cache_handle(
-            spark, table_dir, version, spark.read.schema(written_schema(df)).parquet(final)
-        )
+        key = ("snapshot", os.path.abspath(table_dir), version)
+        app_cache(spark)[key] = spark.read.schema(written_schema(df)).parquet(final)
     return version
-
-
-#: (applicationId, table_dir, version) -> scan handle. A published
-#: version is immutable and version numbers are never reused (see
-#: write_snapshot/vacuum_snapshots), so a cached PLAN handle can
-#: never go stale; the pointer is still re-resolved on every call, so
-#: version swings are always observed. Mirrors catalog._TABLE_CACHE —
-#: this caches file listing + footer schema resolution (measured
-#: ~110 ms per read_snapshot on the serve path builds, r16), never
-#: results. write_snapshot seeds it for unpartitioned versions.
-_SNAPSHOT_CACHE: dict[tuple[str, str, int], DataFrame] = {}
-
-
-def _cache_key(spark: SparkSession, table_dir: str, version: int) -> tuple[str, str, int]:
-    return (spark.sparkContext.applicationId, os.path.abspath(table_dir), version)
-
-
-def _cache_handle(spark: SparkSession, table_dir: str, version: int, df: DataFrame) -> None:
-    from sas_etl_spark.catalog import evict_dead_app_entries
-
-    key = _cache_key(spark, table_dir, version)
-    evict_dead_app_entries(_SNAPSHOT_CACHE, key[0])
-    _SNAPSHOT_CACHE[key] = df
 
 
 def read_snapshot(
     spark: SparkSession, table_dir: str, version: int | None = None
 ) -> DataFrame:
-    """Read the current snapshot, or time-travel to ``version``."""
+    """Read the current snapshot, or time-travel to ``version``.
+
+    The scan handle is kept in ``app_cache`` (write_snapshot seeds it
+    for unpartitioned versions): a repeat read skips file listing and
+    footer schema resolution (~110 ms per read on the serve-path
+    builds). A published version is immutable and its number is never
+    reused, so a handle cannot go stale while its directory exists;
+    the pointer is re-resolved on every call, so version swings are
+    always seen. A vacuumed version's handle is never served: the read
+    falls through to Spark, which fails with PATH_NOT_FOUND here
+    instead of FileNotFound on an executor mid-job."""
     if version is None:
         version = current_version(table_dir)
-    cached = _SNAPSHOT_CACHE.get(_cache_key(spark, table_dir, version))
-    if cached is not None:
+    path = os.path.join(table_dir, f"v={version}")
+    cache = app_cache(spark)
+    key = ("snapshot", os.path.abspath(table_dir), version)
+    cached = cache.get(key)
+    if cached is not None and os.path.isdir(path):
         return cached
-    df = spark.read.parquet(os.path.join(table_dir, f"v={version}"))
-    _cache_handle(spark, table_dir, version, df)
+    df = spark.read.parquet(path)
+    cache[key] = df
     return df
 
 
@@ -153,15 +143,4 @@ def vacuum_snapshots(table_dir: str, keep_last: int = 2) -> list[int]:
         if v not in keep:
             shutil.rmtree(os.path.join(table_dir, f"v={v}"))
             removed.append(v)
-    if removed:
-        # Evict the vacuumed versions' plan handles (ADVICE r16): a
-        # cached handle for a deleted v=N dir would otherwise fail
-        # mid-job with executor FileNotFound instead of a clean
-        # PATH_NOT_FOUND at read_snapshot.
-        gone = set(removed)
-        abspath = os.path.abspath(table_dir)
-        for key in [
-            k for k in _SNAPSHOT_CACHE if k[1] == abspath and k[2] in gone
-        ]:
-            del _SNAPSHOT_CACHE[key]
     return removed

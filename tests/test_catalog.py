@@ -161,31 +161,23 @@ def test_run_sql_textual_surface(spark):
     assert n > 0
 
 
-def test_dead_app_cache_entries_evicted(spark):
-    """Entries keyed by a stopped application's id are dropped on the
-    next insert-after-miss (one live SparkContext per process, so a
-    foreign app-id is always dead) — a long-lived multi-session host
-    must not accumulate dead plan handles."""
-    from sas_etl_spark import catalog
+def test_app_cache_is_per_spark_context():
+    """Each SparkContext carries its own cache dict, so a new context
+    starts empty and a stopped one takes its entries with it; every
+    session on one context gets the same dict."""
+    from sas_etl_spark.session import app_cache
 
-    live = spark.sparkContext.applicationId
-    catalog._TABLE_CACHE[("app-dead-0xdead", SF_SMOKE, "orders")] = object()
-    # trailing "/." resolves to the same files but forms a fresh cache
-    # key, forcing the miss->insert path that runs eviction
-    load_table(spark, SF_SMOKE + "/.", "nation")
-    assert all(k[0] == live for k in catalog._TABLE_CACHE)
+    class _Session:
+        def __init__(self, context):
+            self.sparkContext = context
 
-
-def test_dead_app_qvec_cache_evicted(spark):
-    from sas_etl_spark.queries import llm
-    from sas_etl_spark.registry import QUERIES, queries_map
-
-    queries_map()
-    live = spark.sparkContext.applicationId
-    llm._QVEC_CACHE.pop((live, SF_SMOKE), None)  # force the miss path
-    llm._QVEC_CACHE[("app-dead-0xdead", SF_SMOKE)] = [0.0]
-    QUERIES["q_knn_cosine"].fn(spark, SF_SMOKE).collect()
-    assert all(k[0] == live for k in llm._QVEC_CACHE)
+    first, second = _Session(type("_Context", (), {})()), _Session(type("_Context", (), {})())
+    cache = app_cache(first)
+    cache[("table", SF_SMOKE, "orders")] = "handle"
+    assert app_cache(first) is cache
+    assert app_cache(_Session(first.sparkContext)) is cache
+    assert app_cache(second) == {}
+    assert app_cache(second) is not cache
 
 
 def test_dead_app_scratch_roots_reclaimed(spark):
@@ -268,7 +260,7 @@ def test_ship_package_zip_dir_removed_at_exit(monkeypatch):
 def test_configure_propagates_unexpected_conf_errors():
     """configure() leaves a static conf as the session built it, and
     raises on any other failure to set a conf."""
-    from sas_etl_spark.session import RUNTIME_CONFS, configure
+    from sas_etl_spark.session import RUNTIME_CONFS, app_cache, configure
 
     class _Conf:
         def __init__(self, fail):
@@ -282,7 +274,8 @@ def test_configure_propagates_unexpected_conf_errors():
     class _Session:
         def __init__(self, fail):
             self.conf = _Conf(fail)
-            self.sparkContext = type("_Context", (), {"_sas_etl_pkg_shipped": True})()
+            self.sparkContext = type("_Context", (), {})()
+            app_cache(self)[("package",)] = True  # already shipped
 
     static = AnalysisException(
         message="static", errorClass="CANNOT_MODIFY_STATIC_CONFIG", messageParameters={}

@@ -85,8 +85,8 @@ def test_written_schema_matches_inferred_read_and_seeds_snapshot_cache(spark, tm
     an inference read of that version."""
     from pyspark.sql import functions as F
 
+    from sas_etl_spark.session import app_cache
     from sas_etl_spark.sources import written_schema
-    from sas_etl_spark.sources.snapshots import _SNAPSHOT_CACHE, _cache_key
 
     df = spark.range(4).select(
         F.col("id").alias("big"),
@@ -110,7 +110,7 @@ def test_written_schema_matches_inferred_read_and_seeds_snapshot_cache(spark, tm
     table = str(tmp_path / "seeded")
     version = write_snapshot(df, table)
     seeded = read_snapshot(spark, table)
-    assert _SNAPSHOT_CACHE.pop(_cache_key(spark, table, version)) is seeded
+    assert app_cache(spark).pop(("snapshot", table, version)) is seeded
     inferred = read_snapshot(spark, table)
     assert inferred is not seeded
     assert seeded.schema == inferred.schema
@@ -120,10 +120,26 @@ def test_written_schema_matches_inferred_read_and_seeds_snapshot_cache(spark, tm
 def test_partitioned_snapshot_keeps_inference(spark, tmp_path):
     """Partition columns are typed from directory names, so a
     partitioned version is not seeded into the handle cache."""
-    from sas_etl_spark.sources.snapshots import _SNAPSHOT_CACHE, _cache_key
+    from sas_etl_spark.session import app_cache
 
     table = str(tmp_path / "parted")
     df = spark.range(6).selectExpr("id", "cast(id % 2 as string) as part")
     version = write_snapshot(df, table, partition_by=("part",))
-    assert _cache_key(spark, table, version) not in _SNAPSHOT_CACHE
+    assert ("snapshot", table, version) not in app_cache(spark)
     assert dict(read_snapshot(spark, table).dtypes)["part"] == "int"
+
+
+def test_vacuumed_version_is_not_served_from_the_handle_cache(spark, tmp_path):
+    """write_snapshot caches each version's handle; once vacuumed, a
+    read of that version fails at read_snapshot, not on an executor."""
+    from pyspark.errors import AnalysisException
+
+    from sas_etl_spark.sources.snapshots import vacuum_snapshots
+
+    table = str(tmp_path / "vac")
+    for k in (1, 2):
+        write_snapshot(spark.range(k).toDF("v"), table)
+    assert vacuum_snapshots(table, keep_last=1) == [1]
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        read_snapshot(spark, table, version=1)
+    assert read_snapshot(spark, table).count() == 2
